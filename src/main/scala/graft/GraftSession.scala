@@ -23,12 +23,6 @@ object GraftSession {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
-      // SPARK_GRAFT_DURABLE=1 flips the artifact registry to its
-      // staging-write mode for the WHOLE workload — the cluster-safe
-      // materialization; used to prove the board is mode-agnostic
-      // (same hashes either way)
-      .config("spark.graft.artifacts.durable",
-        if (sys.env.get("SPARK_GRAFT_DURABLE").exists(_ == "1")) "true" else "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       // AQE coalescing respects advisoryPartitionSizeInBytes instead
@@ -37,9 +31,9 @@ object GraftSession {
       // BOTH directions: at 100 TB an exchange still splits into
       // thousands of advisory-sized partitions; at bench scale the
       // 32-way tiny-task fan-out collapses (measured: a 20-query
-      // subset 40.5 s -> 27.7 s at sf0.1). Env-overridable for A/B.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "false"))
+      // subset 40.5 s -> 27.7 s at sf0.1). A runtime SQL conf, so
+      // spark.conf.set still reaches it for an A/B.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.files.openCostInBytes", "1m")
       .config("spark.sql.session.timeZone", "UTC")
@@ -55,7 +49,7 @@ object GraftSession {
     * ContextCleaner's GC-driven lag accumulates storage pressure across
     * many query runs and evicts later queries' blocks.
     */
-  /** Session-memoized ARTIFACTS (graft.operators.Artifacts — e.g. the
+  /** BOUNDED artifacts (graft.operators.Artifacts.memo — e.g. the
     * near-dup pair graph shared by the whole cluster family) are
     * exempt from the sweep: they are pair-bounded by contract, and a
     * localCheckpointed RDD cannot recompute once its blocks drop.

@@ -19,8 +19,10 @@ import java.nio.file.{Files, Paths}
   *     the full board's query phase 420 s serial → ~160 s at 8
   *     threads, sf0.001; whole check.py gate incl. DuckDB compare
   *     2 m 27 s). Shared session state is safe: function registration
-  *     is createOrReplaceTempFunction (idempotent), Artifacts.memo is
-  *     synchronized, and each query writes its own output dir.
+  *     is createOrReplaceTempFunction (idempotent), each artifact is
+  *     a once-cell (concurrent consumers wait for one build, different
+  *     artifacts build in parallel), and each query writes its own
+  *     output dir.
   */
 object Verify {
   def main(args: Array[String]): Unit = {

@@ -77,7 +77,7 @@ object DedupOps {
     * is the 60-bit hash array).
     */
   private def shingleDocHashes(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "shingle_hashes", durable = Some(true)) {
+    Artifacts.stage(spark, dir, "shingle_hashes") {
       graft.functions.VectorExpressions.register(spark)
       Tables
         .documents(spark, dir)
@@ -152,7 +152,7 @@ object DedupOps {
     * ⇒ durable parquet, never pinned registry blocks.
     */
   private def docSigsKernel(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "minhash_sigs", durable = Some(true))(
+    Artifacts.stage(spark, dir, "minhash_sigs")(
       docSigsKernelBuild(spark, dir))
 
   private[graft] def docSigsKernelBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -429,7 +429,7 @@ object DedupOps {
     * bit string per doc, corpus-co-scaled ⇒ durable parquet.
     */
   def simhash(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "simhash_fp", durable = Some(true))(
+    Artifacts.stage(spark, dir, "simhash_fp")(
       simhashBuild(spark, dir))
 
   private[graft] def simhashBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -544,7 +544,7 @@ object DedupOps {
       .filter(size(col("hs")) > 0)
     val mat =
       if (n == DecontamN)
-        Artifacts.memo(spark, dir, "decontam_hashes", durable = Some(true))(base)
+        Artifacts.stage(spark, dir, "decontam_hashes")(base)
       else base.localCheckpoint()
     mat.select(col("doc_id"), col("split"), explode(col("hs")).as("h"))
   }
@@ -1434,7 +1434,7 @@ object DedupOps {
     * class as the cleaned corpus.
     */
   def spanRewrite(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "span_rewrite", durable = Some(true))(
+    Artifacts.stage(spark, dir, "span_rewrite")(
       spanRewriteBuild(spark, dir))
 
   private[graft] def spanRewriteBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -1535,7 +1535,7 @@ object DedupOps {
     * the rewrite readout and the span family audit).
     */
   def spanRewriteAnyAlign(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "span_rewrite_anyalign", durable = Some(true))(
+    Artifacts.stage(spark, dir, "span_rewrite_anyalign")(
       spanRewriteAnyAlignBuild(spark, dir))
 
   private[graft] def spanRewriteAnyAlignBuild(spark: SparkSession, dir: String): DataFrame = {

@@ -4546,7 +4546,7 @@ object TextOps {
     * the three-stage clean. Same staging class as [[canonicalizedClean]].
     */
   def cleanPipeline(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "clean_corpus", durable = Some(true))(
+    Artifacts.stage(spark, dir, "clean_corpus")(
       cleanPipelineBuild(spark, dir))
 
   private[graft] def cleanPipelineBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -4766,7 +4766,7 @@ object TextOps {
     * registry blocks.
     */
   private[graft] def canonicalizedClean(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "canon_clean", durable = Some(true))(
+    Artifacts.stage(spark, dir, "canon_clean")(
       canonicalizedCleanBuild(spark, dir))
 
   private[graft] def canonicalizedCleanBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -6041,7 +6041,7 @@ object TextOps {
     * Same staging class as `dsir_scores`.
     */
   def knDocPpl(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "kn_ppl", durable = Some(true))(
+    Artifacts.stage(spark, dir, "kn_ppl")(
       knDocPplBuild(spark, dir))
 
   private[graft] def knDocPplBuild(spark: SparkSession, dir: String): DataFrame = {
@@ -6346,17 +6346,13 @@ object TextOps {
     */
   /** Round 11 (cont.): staged DURABLY like [[knDocPpl]] — three
     * consumers (the score sheet, [[knOrderGain]],
-    * [[selectorAgreement]]). The model artifact is resolved BEFORE
-    * entering the registry memo: [[knFamilyArtifacts]] takes its own
-    * monitor and then the registry lock, so a build closure that
-    * re-entered the family builder from INSIDE the registry lock
-    * would invert that order and deadlock Verify's concurrent query
-    * pool (observed live, two threads).
+    * [[selectorAgreement]]). The model is resolved BEFORE the cell, so
+    * the KN family's build time is billed to its own `artifact:` lines
+    * instead of also to `kn3_ppl`.
     */
   def kn3DocPpl(spark: SparkSession, dir: String): DataFrame = {
     val model = kn3ModelArtifact(spark, dir)
-    Artifacts.memo(spark, dir, "kn3_ppl", durable = Some(true))(
-      kn3DocPplFrom(spark, dir, model))
+    Artifacts.stage(spark, dir, "kn3_ppl")(kn3DocPplFrom(spark, dir, model))
   }
 
   private[graft] def kn3DocPplBuild(spark: SparkSession, dir: String): DataFrame =
@@ -6710,18 +6706,17 @@ object TextOps {
     *    production pipeline actually ships (KenLM always count-prunes
     *    at order 5). Singleton pruning removes the asymptotically
     *    dominant slice; the threshold knob rises with the token
-    *    budget at larger corpora. Ephemeral-memoized.
+    *    budget at larger corpora. Bounded (memo).
+    *
+    * The family is ONE once-cell: Verify's query pool may request two
+    * members concurrently, and per-member cells alone would let the
+    * second thread rebuild its own raw ladder for the members the
+    * first has not reached yet (correct, but a second corpus collapse).
     */
-  private val knFamilyLock = new Object
-
   private def knFamilyArtifacts(
       spark: SparkSession,
       dir: String): (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    // coarse family lock: Verify's query pool may request two family
-    // members concurrently; per-name memo locking alone would let the
-    // second thread rebuild its own raw ladder for the names the first
-    // hasn't reached yet (correct but a second corpus collapse)
-    knFamilyLock.synchronized {
+    Artifacts.once(spark, dir, "kn_family") {
     var staged = List.empty[DataFrame]
     // recording checkpoint, threaded through the level recursion as
     // its `mat`: each adjusted-count table and each level materializes
@@ -6755,11 +6750,11 @@ object TextOps {
       ls.updated(5, ckpt(ls(5)))
     }
     try {
-      val m3 = Artifacts.memo(spark, dir, "kn3_model", durable = Some(true))(
+      val m3 = Artifacts.stage(spark, dir, "kn3_model")(
         kn3ModelFrom(spark, raws()._1))
-      val m4 = Artifacts.memo(spark, dir, "kn4_model", durable = Some(true))(
+      val m4 = Artifacts.stage(spark, dir, "kn4_model")(
         knNModelFrom(spark, raws()._2, 4, ckpt))
-      val m5 = Artifacts.memo(spark, dir, "kn5_model", durable = Some(true))(
+      val m5 = Artifacts.stage(spark, dir, "kn5_model")(
         knFinishN(levels5(5)))
       val pruned = Artifacts.memo(spark, dir, "kn5_pruned")(
         knPrunedFrom(spark, levels5, knPruneTheta(spark)))
@@ -6836,13 +6831,11 @@ object TextOps {
   /** Round 11 (cont.): staged DURABLY like [[knDocPpl]] — two
     * consumers (the score sheet, [[pplBucketSplit]]). kn4DocPpl has a
     * single consumer and stays unstaged (a staging write would only
-    * add cost). Model resolved BEFORE the memo — the [[kn3DocPpl]]
-    * lock-ordering note applies.
+    * add cost). Model resolved before the cell, as in [[kn3DocPpl]].
     */
   def kn5DocPpl(spark: SparkSession, dir: String): DataFrame = {
     val model = kn5ModelArtifact(spark, dir)
-    Artifacts.memo(spark, dir, "kn5_ppl", durable = Some(true))(
-      knNDocPpl(spark, dir, 5, model))
+    Artifacts.stage(spark, dir, "kn5_ppl")(knNDocPpl(spark, dir, 5, model))
   }
 
   private[graft] def kn5DocPplBuild(spark: SparkSession, dir: String): DataFrame =
@@ -7208,7 +7201,7 @@ object TextOps {
     * durable parquet staging (the shingle_hashes class).
     */
   def dsirDocScores(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.memo(spark, dir, "dsir_scores", durable = Some(true))(
+    Artifacts.stage(spark, dir, "dsir_scores")(
       dsirDocScoresBuild(spark, dir))
 
   private[graft] def dsirDocScoresBuild(spark: SparkSession, dir: String): DataFrame = {

@@ -184,7 +184,7 @@ object MultimodalOps {
     * pinned registry blocks.
     */
   private[graft] def mediaFingerprints(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Artifacts.memo(spark, dir, "media_fp", durable = Some(true))(
+    graft.operators.Artifacts.stage(spark, dir, "media_fp")(
       mediaFingerprintsBuild(spark, dir))
 
   private[graft] def mediaFingerprintsBuild(spark: SparkSession, dir: String): DataFrame = {

@@ -17,33 +17,34 @@ import graft.functions.Fnv1a
 class EngineSpec extends AnyFunSuite {
   import SparkTestBase._
 
-  private lazy val gutenberg: Seq[(String, String)] =
+  // (file, contents) of the test corpus, the sequential oracle's input
+  private lazy val corpus: Seq[(String, String)] =
     Files
-      .list(Paths.get("/root/reference/inputs"))
+      .list(Paths.get(CorpusDir))
       .iterator()
       .asScala
-      .filter(_.getFileName.toString.startsWith("pg-"))
+      .filter(_.getFileName.toString.endsWith(".txt"))
       .map(p => p.toString -> new String(Files.readAllBytes(p), "UTF-8"))
       .toSeq
       .sortBy(_._1)
 
   private def runDistributed(app: engine.MrApp): Map[String, String] =
     Engine
-      .run(spark, GutenbergGlob, app)
+      .run(spark, CorpusGlob, app)
       .collect()
       .map(kv => kv.key -> kv.value)
       .toMap
 
   private def runOracle(app: engine.MrApp): Map[String, String] =
-    Engine.sequential(gutenberg, app).map(kv => kv.key -> kv.value).toMap
+    Engine.sequential(corpus, app).map(kv => kv.key -> kv.value).toMap
 
-  test("wc distributed == sequential oracle on the 9 Gutenberg texts") {
+  test("wc distributed == sequential oracle on the test corpus") {
     val got = runDistributed(Apps.WordCount)
     val want = runOracle(Apps.WordCount)
     assert(got.size === want.size)
     assert(got === want)
     // spot-check a known token against independent counting
-    val a = gutenberg.map(_._2.split("[^\\p{L}]+").count(_ == "the")).sum
+    val a = corpus.map(_._2.split("[^\\p{L}]+").count(_ == "the")).sum
     assert(got("the").toInt === a)
   }
 
@@ -60,7 +61,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("partition invariance: shuffle parallelism 1 vs 10 gives identical results") {
     import spark.implicits._
-    val input = spark.createDataset(gutenberg.take(4))
+    val input = spark.createDataset(corpus.take(4))
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       spark.conf.set("spark.sql.shuffle.partitions", "1")
@@ -279,18 +280,18 @@ class EngineSpec extends AnyFunSuite {
   test("exactly-once map execution without failures (P5 jobcount analogue)") {
     import spark.implicits._
     val acc = spark.sparkContext.longAccumulator("mapCalls")
-    val input = spark.createDataset(gutenberg)
+    val input = spark.createDataset(corpus)
     input
       .flatMap { case (f, c) => acc.add(1); Apps.FileCount.map(f, c) }
       .groupByKey(_.key)
       .count()
       .collect()
-    assert(acc.value === gutenberg.size)
+    assert(acc.value === corpus.size)
   }
 
   test("task retry recovers from a first-attempt crash (P7 crash analogue)") {
     import spark.implicits._
-    val input = spark.createDataset(gutenberg)
+    val input = spark.createDataset(corpus)
     val result = input
       .repartition(4)
       .mapPartitions { it =>
@@ -347,7 +348,7 @@ class EngineSpec extends AnyFunSuite {
         }
       }
       val got = Engine
-        .run(spark, GutenbergGlob, faulty)
+        .run(spark, CorpusGlob, faulty)
         .collect()
         .map(kv => kv.key -> kv.value)
         .toMap

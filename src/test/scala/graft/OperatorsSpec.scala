@@ -8486,11 +8486,10 @@ class OperatorsSpec extends AnyFunSuite {
       "kn5_pruned_fit", "kn5_pruned_stats", "kn5_pruned_doc_ppl")
     def run(): Map[String, Set[String]] = {
       graft.operators.Artifacts.clear()
-      // the kn3/4/5 models stage DURABLY (round 11) — clear() alone
-      // would recover them from parquet instead of rebuilding under
-      // the new parallelism, so drop the staged files too
-      Seq("kn3_model", "kn4_model", "kn5_model").foreach(n =>
-        graft.operators.Artifacts.dropStaging(spark, Sf0001, Some(n)))
+      // clear() alone would recover every STAGED artifact from parquet
+      // instead of rebuilding it under the new parallelism, so drop
+      // the dir's staged files too
+      graft.operators.Artifacts.dropStaging(spark, Sf0001)
       names.map { n =>
         n -> SparkEntry.queries(n)(spark, Sf0001).collect().map(_.toString).toSet
       }.toMap
@@ -8563,8 +8562,7 @@ class OperatorsSpec extends AnyFunSuite {
       "token_entropy_gate", "selector_agreement", "kn_order_gain")
     def run(): Map[String, Set[String]] = {
       graft.operators.Artifacts.clear()
-      Seq("kn3_model", "kn4_model", "kn5_model").foreach(n =>
-        graft.operators.Artifacts.dropStaging(spark, Sf0001, Some(n)))
+      graft.operators.Artifacts.dropStaging(spark, Sf0001)
       names.map { n =>
         n -> SparkEntry.queries(n)(spark, Sf0001).collect().map(_.toString).toSet
       }.toMap
