@@ -11,10 +11,11 @@ object Apps {
   /** Tokenize on any non-letter rune — `strings.FieldsFunc(contents,
     * !unicode.IsLetter)` (`plugins/wc.go:24-27`). Java's `\p{L}` class
     * matches Go's `unicode.IsLetter`; `FieldsFunc` never yields empty
-    * tokens, so drop them after the split.
+    * tokens, so drop them after the split (pattern compiled once).
     */
+  private val NonLetters = java.util.regex.Pattern.compile("[^\\p{L}]+")
   def tokenize(contents: String): Seq[String] =
-    contents.split("[^\\p{L}]+").toSeq.filter(_.nonEmpty)
+    NonLetters.split(contents).toSeq.filter(_.nonEmpty)
 
   /** P1 wc — word count (`plugins/wc.go:22-43`): emit (word,"1") per
     * occurrence; reduce = number of values.

@@ -1,6 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Fnv1a
@@ -22,12 +23,11 @@ import graft.functions.Fnv1a
   *
   * Scale notes (100 TB): the scan is one task per file (unsplittable
   * whole-file semantics — same granularity as the reference, F1); the
-  * only shuffle is the groupByKey, which streams values per key through
-  * an iterator rather than materializing a reduce partition in memory
-  * (the reference loads + sorts the entire reduce input in memory,
-  * `mr/worker.go:40-58` — that is its OOM ceiling, removed here by
-  * Spark's spillable ExternalSorter). Per-key value lists are
-  * materialized only inside `reduce`, matching the reference contract.
+  * only shuffle groups by hash in Spark's spillable ExternalAppendOnlyMap:
+  * no sort, and a reduce partition need not fit in memory (the reference
+  * loads + sorts it all, `mr/worker.go:40-58` — its OOM ceiling). One
+  * key's values must fit in memory, as `reduce(key, values: Seq[String])`
+  * and the reference already require.
   */
 object Engine {
 
@@ -58,30 +58,28 @@ object Engine {
 
   /** The kernel on an arbitrary (file, contents) dataset — lets tests
     * and table-backed callers (e.g. the `documents` table as a corpus)
-    * reuse the same dataflow.
+    * reuse the same dataflow. The result is backed by one RDD shuffle: a
+    * second action on it (e.g. `writeText` after a count) reuses the
+    * shuffle output and runs only the reduce stage.
     */
   def mapReduce(
       spark: SparkSession,
       input: Dataset[(String, String)],
       app: MrApp
   ): Dataset[KeyValue] = {
-    // reduce parallelism (the reference's nReduce) is Spark's
-    // spark.sql.shuffle.partitions — a session conf, not a per-job
-    // argument; writeText carries the explicit nReduce for output
-    // bucket parity
     import spark.implicits._
-    val mapped: Dataset[KeyValue] = // F2: 1 input row → N KeyValue rows
-      input.flatMap { case (file, contents) => app.map(file, contents) }
-    // F3+F5+F6: hash partition on key, group, fold with the user reduce.
-    // groupByKey shuffles on key (Murmur3 — per-key results are
-    // partition-invariant, see Fnv1a scaladoc) and hands reduce a
-    // streaming iterator; sort-order of values is unspecified, matching
-    // the reference (`mr/worker.go:58` sorts keys only).
-    mapped
-      .groupByKey(_.key)
-      .mapGroups { (key, rows) =>
-        KeyValue(key, app.reduce(key, rows.map(_.value).toSeq))
-      }
+    // F3: nReduce is the session's spark.sql.shuffle.partitions, and AQE
+    // cannot coalesce an RDD shuffle; writeText carries the explicit
+    // nReduce for output bucket parity. Per-key results are partition-
+    // invariant (see Fnv1a scaladoc).
+    val nReduce = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // F2 map; F5+F6 hash-group (no sort) and fold with the user reduce.
+    // Value order is unspecified, as in the reference (`mr/worker.go:58` sorts keys only)
+    val reduced = input.rdd
+      .flatMap { case (file, contents) => app.map(file, contents).map(kv => (kv.key, kv.value)) }
+      .groupByKey(nReduce)
+      .map { case (key, values) => KeyValue(key, app.reduce(key, values.toSeq)) }
+    spark.createDataset(reduced)
   }
 
   /** F7: text sink — `"%v %v\n"`-formatted lines in nReduce files, with

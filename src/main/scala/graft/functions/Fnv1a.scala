@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * partitioner (`utils/hashes.go:7-11`, used at `mr/worker.go:129` as
   * `Ihash(key) % nReduce`).
   *
-  * Spark's own shuffle uses Murmur3; results are identical regardless of
+  * Spark's shuffles hash keys their own way; results are identical regardless of
   * which key lands in which reduce partition, so this exists only for
   * per-file output parity with the reference (`mr-out-R` assignment) and
   * for tests that assert the bucketing function itself.

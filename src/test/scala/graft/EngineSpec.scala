@@ -61,14 +61,26 @@ class EngineSpec extends AnyFunSuite {
 
   test("partition invariance: shuffle parallelism 1 vs 10 gives identical results") {
     import spark.implicits._
-    val input = spark.createDataset(corpus.take(4))
+    val files = corpus.take(4)
+    val input = spark.createDataset(files)
+    val want = Engine.sequential(files, Apps.WordCount).toSet
+    // word count whose value records the reduce task's partition
+    val tagged = new engine.MrApp {
+      def map(file: String, contents: String): Seq[KeyValue] = Apps.WordCount.map(file, contents)
+      def reduce(key: String, values: Seq[String]): String =
+        s"${org.apache.spark.TaskContext.getPartitionId()} ${Apps.WordCount.reduce(key, values)}"
+    }
     val before = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "1")
-      val r1 = Engine.mapReduce(spark, input, Apps.WordCount).collect().toSet
-      spark.conf.set("spark.sql.shuffle.partitions", "10")
-      val r10 = Engine.mapReduce(spark, input, Apps.WordCount).collect().toSet
-      assert(r1 === r10)
+    try for (n <- Seq(1, 10)) {
+      spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+      val result = Engine.mapReduce(spark, input, tagged)
+      assert(result.rdd.getNumPartitions === n)
+      val rows = result.collect().map(kv => kv.value.split(" ") match {
+        case Array(part, count) => (part.toInt, KeyValue(kv.key, count))
+      })
+      // the reduce ran at that width: every one of the n tasks reduced keys
+      assert(rows.map(_._1).toSet === (0 until n).toSet)
+      assert(rows.map(_._2).toSet === want)
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
@@ -278,35 +290,30 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("exactly-once map execution without failures (P5 jobcount analogue)") {
-    import spark.implicits._
     val acc = spark.sparkContext.longAccumulator("mapCalls")
-    val input = spark.createDataset(corpus)
-    input
-      .flatMap { case (f, c) => acc.add(1); Apps.FileCount.map(f, c) }
-      .groupByKey(_.key)
-      .count()
-      .collect()
+    val counting = new engine.MrApp {
+      def map(file: String, contents: String): Seq[KeyValue] = {
+        acc.add(1)
+        Apps.FileCount.map(file, contents)
+      }
+      def reduce(key: String, values: Seq[String]): String = Apps.FileCount.reduce(key, values)
+    }
+    val got = Engine.run(spark, CorpusGlob, counting).collect().map(kv => kv.key -> kv.value).toMap
     assert(acc.value === corpus.size)
+    assert(got === runOracle(Apps.FileCount))
   }
 
   test("task retry recovers from a first-attempt crash (P7 crash analogue)") {
-    import spark.implicits._
-    val input = spark.createDataset(corpus)
-    val result = input
-      .repartition(4)
-      .mapPartitions { it =>
+    val crashing = new engine.MrApp {
+      def map(file: String, contents: String): Seq[KeyValue] = {
         val tc = org.apache.spark.TaskContext.get()
         if (tc.partitionId() == 0 && tc.attemptNumber() == 0)
           throw new RuntimeException("injected crash (attempt 0)")
-        it
+        Apps.WordCount.map(file, contents)
       }
-      .flatMap { case (f, c) => Apps.WordCount.map(f, c) }
-      .groupByKey(_.key)
-      .mapGroups((k, rows) => KeyValue(k, Apps.WordCount.reduce(k, rows.map(_.value).toSeq)))
-      .collect()
-      .map(kv => kv.key -> kv.value)
-      .toMap
-    assert(result === runOracle(Apps.WordCount))
+      def reduce(key: String, values: Seq[String]): String = Apps.WordCount.reduce(key, values)
+    }
+    assert(runDistributed(crashing) === runOracle(Apps.WordCount))
   }
 
   test("soak: randomized crash + stall injection on BOTH stages, repeated trials " +
@@ -387,29 +394,26 @@ class EngineSpec extends AnyFunSuite {
   test("reduce parallelism: post-shuffle tasks overlap (P4 rtiming analogue)") {
     // The reference asserts >= 2 concurrent REDUCERS (test-mr.sh:180-201,
     // plugins/rtiming.go:81-87); same span-overlap technique as the map
-    // test, but the spans are recorded inside mapGroups — i.e. after the
-    // shuffle, in reduce tasks — and overlap must cross task boundaries.
+    // test, but the spans are recorded inside the engine's reduce — i.e.
+    // after the shuffle, in reduce tasks — and overlap must cross task
+    // boundaries. The shuffle is deliberately tiny: the engine must still
+    // reduce it at the session's shuffle width.
     import spark.implicits._
-    // AQE would coalesce this deliberately-tiny probe shuffle into ONE
-    // reduce task (correct at scale, but it's the very thing the probe
-    // must not do); pin the partition count for the probe only.
-    val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
-    val before = spark.conf.get(coalesceKey)
-    val spans =
-      try {
-        spark.conf.set(coalesceKey, "false")
-        spark
-          .createDataset(1 to 64)
-          .groupByKey(_ % 16)
-          .mapGroups { (_, it) =>
-            val start = System.nanoTime
-            Thread.sleep(150)
-            val end = System.nanoTime
-            it.size // drain the group like a real reducer
-            (org.apache.spark.TaskContext.get().partitionId(), start, end)
-          }
-          .collect()
-      } finally spark.conf.set(coalesceKey, before)
+    val rtiming = new engine.MrApp {
+      def map(file: String, contents: String): Seq[KeyValue] =
+        Seq(KeyValue((file.toInt % 16).toString, file))
+      def reduce(key: String, values: Seq[String]): String = {
+        val start = System.nanoTime
+        Thread.sleep(150)
+        val end = System.nanoTime
+        s"${org.apache.spark.TaskContext.getPartitionId()} $start $end"
+      }
+    }
+    val input = spark.createDataset((1 to 64).map(i => (i.toString, "")))
+    val spans = Engine.mapReduce(spark, input, rtiming).collect().map { kv =>
+      val Array(p, start, end) = kv.value.split(" ")
+      (p.toInt, start.toLong, end.toLong)
+    }
     assert(spans.map(_._1).distinct.length >= 2, "groups all landed in one reduce task")
     val overlaps = spans.combinations(2).count { case Array((p1, s1, e1), (p2, s2, e2)) =>
       p1 != p2 && s1 < e2 && s2 < e1
