@@ -9,22 +9,32 @@ package graft.engine
 object Apps {
 
   /** Tokenize on any non-letter rune — `strings.FieldsFunc(contents,
-    * !unicode.IsLetter)` (`plugins/wc.go:24-27`). Java's `\p{L}` class
-    * matches Go's `unicode.IsLetter`; `FieldsFunc` never yields empty
-    * tokens, so drop them after the split (pattern compiled once).
+    * !unicode.IsLetter)` (`plugins/wc.go:24-27`): one code-point scan
+    * cutting where `Character.isLetter` (which agrees with `\p{L}` and
+    * Go's `unicode.IsLetter`) is false; never yields empty tokens.
     */
-  private val NonLetters = java.util.regex.Pattern.compile("[^\\p{L}]+")
-  def tokenize(contents: String): Seq[String] =
-    NonLetters.split(contents).toSeq.filter(_.nonEmpty)
+  def tokenize(contents: String): Seq[String] = {
+    val tokens = Vector.newBuilder[String]
+    var start = -1 // start of the current token, or -1 between tokens
+    var i = 0
+    while (i <= contents.length) {
+      val cp = if (i < contents.length) contents.codePointAt(i) else ' '
+      if (Character.isLetter(cp)) { if (start < 0) start = i }
+      else if (start >= 0) { tokens += contents.substring(start, i); start = -1 }
+      i += Character.charCount(cp)
+    }
+    tokens.result()
+  }
 
   /** P1 wc — word count (`plugins/wc.go:22-43`): emit (word,"1") per
-    * occurrence; reduce = number of values.
+    * occurrence; combine and reduce sum the values (over raw "1"s, a count).
     */
-  object WordCount extends MrApp {
+  object WordCount extends Combiner {
     def map(file: String, contents: String): Seq[KeyValue] =
       tokenize(contents).map(KeyValue(_, "1"))
+    def combine(key: String, values: Seq[String]): String = reduce(key, values)
     def reduce(key: String, values: Seq[String]): String =
-      values.size.toString
+      values.foldLeft(0L)(_ + _.toLong).toString
   }
 
   /** P2 indexer — inverted index (`plugins/indexer.go:22-41`): distinct
@@ -41,7 +51,7 @@ object Apps {
   /** P6 early_exit data shape (`plugins/early_exit.go:19-36`): one
     * (filename,"1") per file; reduce = count (the 3 s sleep is a
     * finality probe, not data semantics — finality is covered by
-    * Spark's atomic output commit, asserted in tests).
+    * `Engine.writeText` writing `_SUCCESS` last, asserted in tests).
     */
   object FileCount extends MrApp {
     def map(file: String, contents: String): Seq[KeyValue] =

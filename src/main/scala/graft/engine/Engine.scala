@@ -1,6 +1,9 @@
 package graft.engine
 
-import org.apache.spark.HashPartitioner
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.{HashPartitioner, Partitioner, SerializableWritable, TaskContext}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +15,8 @@ import graft.functions.Fnv1a
   * Reference pipeline (`mr/worker.go`): whole-file scan (F1) → user map
   * (F2) → FNV-1a hash partition into nReduce buckets (F3) → JSON
   * intermediate files (F4) → per-partition sort (F5) → adjacency
-  * group + user reduce (F6) → text sink `"key value\n"` (F7).
+  * group + user reduce (F6; a `Combiner` app also combines map-side, §4.3
+  * of the MapReduce paper) → text sink `"key value\n"` in `mr-out-R` (F7).
   * Scheduling, retry, the map→reduce barrier, completion tracking, the
   * intermediate-file registry and the RPC transport (F8–F12) are Spark
   * internals here: the DAG scheduler cuts a stage at the shuffle,
@@ -73,10 +77,19 @@ object Engine {
     // nReduce for output bucket parity. Per-key results are partition-
     // invariant (see Fnv1a scaladoc).
     val nReduce = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    // F2 map; F5+F6 hash-group (no sort) and fold with the user reduce.
-    // Value order is unspecified, as in the reference (`mr/worker.go:58` sorts keys only)
+    // F2 map, combined per map call for a Combiner; F5+F6 hash-group (no sort) and fold with the
+    // user reduce. Value order is unspecified, as in the reference (`mr/worker.go:58` sorts keys only)
     val reduced = input.rdd
-      .flatMap { case (file, contents) => app.map(file, contents).map(kv => (kv.key, kv.value)) }
+      .flatMap { case (file, contents) =>
+        val out = app.map(file, contents)
+        app match {
+          case c: Combiner =>
+            val groups = new java.util.HashMap[String, List[String]]()
+            out.foreach(kv => groups.merge(kv.key, kv.value :: Nil, (vs, v) => v.head :: vs))
+            groups.asScala.iterator.map { case (k, vs) => (k, c.combine(k, vs)) }
+          case _ => out.iterator.map(kv => (kv.key, kv.value))
+        }
+      }
       .groupByKey(nReduce)
       .map { case (key, values) => KeyValue(key, app.reduce(key, values.toSeq)) }
     spark.createDataset(reduced)
@@ -91,37 +104,45 @@ object Engine {
     * re-hashes the expression with Murmur3, so it cannot pin a row to
     * the partition the expression names — a custom partitioner is the
     * one place the RDD API is genuinely required.
+    *
+    * Commit as the reference's reduce does (temp file, then rename,
+    * `mr/worker.go:60-74`): each task attempt writes its bucket, empty or
+    * not, to its own `_temporary/mr-out-<r>-<attempt>`; the driver renames
+    * the attempts `runJob` returns, deletes `_temporary`, then writes
+    * `_SUCCESS`: retries are safe, and `spark.speculation` (off in
+    * `GraftSession`) could leave strays only until `_temporary` goes.
     */
   def writeText(result: Dataset[KeyValue], outDir: String, nReduce: Int = 10): Unit = {
     val sc = result.sparkSession.sparkContext
-    val path = new org.apache.hadoop.fs.Path(outDir)
-    val fs = path.getFileSystem(sc.hadoopConfiguration)
+    val fs = new Path(outDir).getFileSystem(sc.hadoopConfiguration)
+    val path = fs.makeQualified(new Path(outDir)) // tasks and driver name the same files
     if (fs.exists(path)) fs.delete(path, true)
+    val conf = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
     // Composite (bucket, key) shuffle key + repartitionAndSortWithin-
     // Partitions: the sort runs in Spark's spillable ExternalSorter, so
     // a reduce partition never has to fit in heap (an in-memory
     // toArray.sortBy here would re-introduce the reference's OOM
     // ceiling that the scaladoc above claims to remove).
-    result.rdd
+    val buckets = result.rdd
       .map(kv => ((Fnv1a.hash(kv.key) % nReduce, kv.key), kv.value))
-      .repartitionAndSortWithinPartitions(new org.apache.spark.Partitioner {
+      .repartitionAndSortWithinPartitions(new Partitioner {
         override def numPartitions: Int = nReduce
         override def getPartition(key: Any): Int = key.asInstanceOf[(Int, String)]._1
       })
-      .map { case ((_, key), value) => s"$key $value" }
-      .saveAsTextFile(outDir)
-    // Reference file-NAME parity: the reference names each reduce
-    // output `mr-out-<r>` (mr/worker.go:60-61); Hadoop's committer
-    // names the same bucket `part-0000r`. Rename after the commit —
-    // driver-side, nReduce files, and ChecksumFileSystem moves the
-    // .crc sibling along with each data file — so a directory diff
-    // against a real MR run matches name-for-name, not just
-    // byte-for-byte.
-    (0 until nReduce).foreach { r =>
-      val src = new org.apache.hadoop.fs.Path(path, f"part-$r%05d")
-      if (fs.exists(src))
-        fs.rename(src, new org.apache.hadoop.fs.Path(path, s"mr-out-$r"))
-    }
+    val written = sc.runJob(buckets, (ctx: TaskContext, rows: Iterator[((Int, String), String)]) => {
+      val file = new Path(path, s"_temporary/mr-out-${ctx.partitionId()}-${ctx.taskAttemptId()}")
+      val out = file.getFileSystem(conf.value.value).create(file, false)
+      val line = new org.apache.hadoop.io.Text() // the bytes TextOutputFormat writes
+      try rows.foreach { case ((_, key), value) =>
+        line.set(s"$key $value\n")
+        out.write(line.getBytes, 0, line.getLength)
+      } finally out.close()
+      file.toString
+    })
+    for ((file, r) <- written.zipWithIndex)
+      require(fs.rename(new Path(file), new Path(path, s"mr-out-$r")), s"could not commit $file")
+    fs.delete(new Path(path, "_temporary"), true)
+    fs.create(new Path(path, "_SUCCESS")).close()
   }
 
   /** Sequential-oracle twin of `mapReduce` (mirrors

@@ -22,3 +22,11 @@ trait MrApp extends Serializable {
   def map(file: String, contents: String): Seq[KeyValue]
   def reduce(key: String, values: Seq[String]): String
 }
+
+/** The MapReduce paper's combiner (§4.3): a partial reduce the engine
+  * runs per key on each map call's output, before the shuffle. Law, for
+  * any split of a key's values into `parts`:
+  * `reduce(k, parts.map(combine(k, _))) == reduce(k, parts.flatten)`. */
+trait Combiner extends MrApp {
+  def combine(key: String, values: Seq[String]): String
+}

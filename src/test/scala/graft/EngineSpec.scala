@@ -93,6 +93,30 @@ class EngineSpec extends AnyFunSuite {
     val shuffles = Seq(values, Random.shuffle(values), values.reverse)
     for (app <- Apps.registry.values; v <- shuffles)
       assert(app.reduce("k", v) === app.reduce("k", values))
+    // the combiner law: reducing the combined parts of any split of the
+    // values equals reducing all of them (the engine combines per map
+    // call; Engine.sequential never does)
+    val rnd = new Random(42)
+    for (app <- Apps.registry.values.collect { case c: engine.Combiner => c }; trial <- 1 to 20) {
+      val perm = rnd.shuffle(values)
+      val cuts = Seq.fill(rnd.nextInt(6))(rnd.nextInt(values.size + 1)).sorted
+      val parts = (0 +: cuts).zip(cuts :+ values.size).map { case (a, b) => perm.slice(a, b) }
+      assert(app.reduce("k", parts.map(app.combine("k", _))) === app.reduce("k", parts.flatten))
+    }
+  }
+
+  test("tokenize: one code-point scan equals the non-letter regex split") {
+    // the reference tokenizer as a regex: `\p{L}` is Go's unicode.IsLetter
+    def regex(s: String): Seq[String] = s.split("[^\\p{L}]+").toSeq.filter(_.nonEmpty)
+    val crafted = Seq(
+      "", " ,.;-- 42 \r\n\t", "the quick\r\nbrown fox", "abc123def 4five",
+      "math \uD835\uDC00bold\uD835\uDC00 letter", // U+1D400, a supplementary letter
+      "cafe\u0301 re\u0301sume\u0301", // U+0301, a combining mark, is not a letter
+      "lone\uD800surrogate \uDC00x y\uD835", "\u00FCber stra\u00DFe \u0416\u0443\u043A \u6F22\u5B57"
+    )
+    for (s <- crafted ++ corpus.map(_._2)) assert(Apps.tokenize(s) === regex(s))
+    assert(Apps.tokenize("") === Nil && Apps.tokenize(" ,.;-- 42 \r\n\t") === Nil)
+    assert(Apps.tokenize("x\uD835\uDC00y cafe\u0301") === Seq("x\uD835\uDC00y", "cafe"))
   }
 
   test("writeText: lines land in the FNV-1a bucket file, sorted by key (F7 parity)") {
@@ -304,13 +328,15 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("task retry recovers from a first-attempt crash (P7 crash analogue)") {
-    val crashing = new engine.MrApp {
+    // a Combiner, so the retried map attempt runs the combine path too
+    val crashing = new engine.Combiner {
       def map(file: String, contents: String): Seq[KeyValue] = {
         val tc = org.apache.spark.TaskContext.get()
         if (tc.partitionId() == 0 && tc.attemptNumber() == 0)
           throw new RuntimeException("injected crash (attempt 0)")
         Apps.WordCount.map(file, contents)
       }
+      def combine(key: String, values: Seq[String]): String = Apps.WordCount.combine(key, values)
       def reduce(key: String, values: Seq[String]): String = Apps.WordCount.reduce(key, values)
     }
     assert(runDistributed(crashing) === runOracle(Apps.WordCount))
@@ -367,9 +393,10 @@ class EngineSpec extends AnyFunSuite {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-final").toString
     Engine.writeText(spark.createDataset(Seq(KeyValue("k", "v"))), tmp, nReduce = 2)
-    // Spark's output commit protocol writes _SUCCESS last; its presence
-    // when the action returns is the reference's early-exit invariant
-    // (`test-mr.sh:228-284`): no reader can observe a partial job.
+    // writeText renames every bucket file into place, then writes
+    // _SUCCESS last; its presence when the call returns is the
+    // reference's early-exit invariant (`test-mr.sh:228-284`): no reader
+    // can observe a partial job.
     assert(Files.exists(Paths.get(tmp, "_SUCCESS")))
   }
 
