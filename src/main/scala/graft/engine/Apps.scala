@@ -38,12 +38,14 @@ object Apps {
   }
 
   /** P2 indexer — inverted index (`plugins/indexer.go:22-41`): distinct
-    * words per document → (word, doc); reduce = `"<n> <d1,d2,...>"`
-    * with the doc list sorted.
+    * words per document (first occurrences, in order) → (word, doc);
+    * reduce = `"<n> <d1,d2,...>"` with the doc list sorted.
     */
   object Indexer extends MrApp {
-    def map(file: String, contents: String): Seq[KeyValue] =
-      tokenize(contents).distinct.map(KeyValue(_, file))
+    def map(file: String, contents: String): Seq[KeyValue] = {
+      val seen = new java.util.HashSet[String]()
+      tokenize(contents).filter(seen.add).map(KeyValue(_, file))
+    }
     def reduce(key: String, values: Seq[String]): String =
       s"${values.size} ${values.sorted.mkString(",")}"
   }

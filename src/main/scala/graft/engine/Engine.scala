@@ -1,13 +1,16 @@
 package graft.engine
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.{HashPartitioner, Partitioner, SerializableWritable, TaskContext}
+import org.apache.spark.{SerializableWritable, TaskContext}
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-import graft.functions.Fnv1a
+import graft.functions.VectorExpressions
 
 /** Generic MapReduce-on-Spark kernel: capability parity with the
   * reference's fixed dataflow (SURVEY.md §2A, F1–F12).
@@ -25,21 +28,19 @@ import graft.functions.Fnv1a
   * the shuffle service's exactly-once commit removes the reference's
   * duplicate-intermediate-file hazard (`mr/notify_intermediate_file.go:6`).
   *
-  * Scale notes (100 TB): the scan is one task per file (unsplittable
-  * whole-file semantics — same granularity as the reference, F1); the
-  * only shuffle groups by hash in Spark's spillable ExternalAppendOnlyMap:
-  * no sort, and a reduce partition need not fit in memory (the reference
-  * loads + sorts it all, `mr/worker.go:40-58` — its OOM ceiling). One
-  * key's values must fit in memory, as `reduce(key, values: Seq[String])`
-  * and the reference already require.
+  * Scale notes: both shuffles (reduce and sink) carry `UnsafeRow`s, sorted
+  * in Spark's spillable `UnsafeExternalSorter`: a reduce partition need not
+  * fit in memory (the reference loads + sorts it all, `mr/worker.go:40-58`).
+  * One key's values must, as `reduce(key, values: Seq[String])` and the
+  * reference require. The scan never splits a file (F1).
   */
 object Engine {
 
   /** F1: whole-file scan. One row per file: (fileName, contents).
-    * `binaryFile` gives (path, content) with one partition per file for
-    * files below maxPartitionBytes — the same task granularity as the
-    * reference's one-map-task-per-file (`mr/types.go:19-22`).
-    */
+    * `binaryFile` never splits a file, but packs files into scan tasks
+    * by size plus `spark.sql.files.openCostInBytes`: small files share a
+    * task, and the largest is alone in its own, as every file is in the
+    * reference (`mr/types.go:19-22`). */
   def scanWholeFiles(spark: SparkSession, inputGlob: String): Dataset[(String, String)] = {
     import spark.implicits._
     spark.read
@@ -62,9 +63,8 @@ object Engine {
 
   /** The kernel on an arbitrary (file, contents) dataset — lets tests
     * and table-backed callers (e.g. the `documents` table as a corpus)
-    * reuse the same dataflow. The result is backed by one RDD shuffle: a
-    * second action on it (e.g. `writeText` after a count) reuses the
-    * shuffle output and runs only the reduce stage.
+    * reuse the same dataflow. Building it runs no Spark job, and each
+    * action on the result plans its own query, map stage included.
     */
   def mapReduce(
       spark: SparkSession,
@@ -72,38 +72,40 @@ object Engine {
       app: MrApp
   ): Dataset[KeyValue] = {
     import spark.implicits._
-    // F3: nReduce is the session's spark.sql.shuffle.partitions, and AQE
-    // cannot coalesce an RDD shuffle; writeText carries the explicit
-    // nReduce for output bucket parity. Per-key results are partition-
-    // invariant (see Fnv1a scaladoc).
-    val nReduce = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    // F2 map, combined per map call for a Combiner; F5+F6 hash-group (no sort) and fold with the
-    // user reduce. Value order is unspecified, as in the reference (`mr/worker.go:58` sorts keys only)
-    val reduced = input.rdd
-      .flatMap { case (file, contents) =>
+    // F3: nReduce is the session's spark.sql.shuffle.partitions, a count AQE never coalesces (writeText
+    // carries its own for bucket parity); per-key results are partition-invariant (see Fnv1a scaladoc).
+    val nReduce = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    input
+      .flatMap { case (file, contents) => // F2 map, combined per map call for a Combiner
         val out = app.map(file, contents)
         app match {
           case c: Combiner =>
-            val groups = new java.util.HashMap[String, List[String]]()
-            out.foreach(kv => groups.merge(kv.key, kv.value :: Nil, (vs, v) => v.head :: vs))
-            groups.asScala.iterator.map { case (k, vs) => (k, c.combine(k, vs)) }
-          case _ => out.iterator.map(kv => (kv.key, kv.value))
+            val groups = new java.util.HashMap[String, ArrayBuffer[String]]()
+            out.foreach(kv => groups.computeIfAbsent(kv.key, _ => ArrayBuffer.empty) += kv.value)
+            groups.asScala.iterator.map { case (k, vs) => KeyValue(k, c.combine(k, ArraySeq.from(vs))) }
+          case _ => out
         }
       }
-      .groupByKey(nReduce)
-      .map { case (key, values) => KeyValue(key, app.reduce(key, values.toSeq)) }
-    spark.createDataset(reduced)
+      .repartition(nReduce, col("key"))
+      .sortWithinPartitions("key")
+      .mapPartitions { rows => // F5+F6: fold each run of equal keys with the user reduce
+        // value order is unspecified, as in the reference (`mr/worker.go:58` sorts keys only)
+        val it = rows.buffered
+        Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+          val key = it.head.key
+          val values = ArrayBuffer.empty[String]
+          while (it.hasNext && it.head.key == key) values += it.next().value
+          KeyValue(key, app.reduce(key, ArraySeq.from(values)))
+        }
+      }
   }
 
   /** F7: text sink — `"%v %v\n"`-formatted lines in nReduce files, with
     * the reference's FNV-1a bucket assignment (`mr-out-R` parity:
     * which key lands in which output partition matches
-    * `utils.Ihash(key) % nReduce`, `mr/worker.go:60-74,129`).
-    *
-    * Uses an explicit RDD Partitioner: `Dataset.repartition(n, expr)`
-    * re-hashes the expression with Murmur3, so it cannot pin a row to
-    * the partition the expression names — a custom partitioner is the
-    * one place the RDD API is genuinely required.
+    * `utils.Ihash(key) % nReduce`, `mr/worker.go:60-74,129`; `repartitionById`
+    * pins each row to its bucket's partition), each file sorted by the key's
+    * UTF-8 bytes, Go's `sort.Sort(ByKey)` order.
     *
     * Commit as the reference's reduce does (temp file, then rename,
     * `mr/worker.go:60-74`): each task attempt writes its bucket, empty or
@@ -118,24 +120,20 @@ object Engine {
     val path = fs.makeQualified(new Path(outDir)) // tasks and driver name the same files
     if (fs.exists(path)) fs.delete(path, true)
     val conf = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
-    // Composite (bucket, key) shuffle key + repartitionAndSortWithin-
-    // Partitions: the sort runs in Spark's spillable ExternalSorter, so
-    // a reduce partition never has to fit in heap (an in-memory
-    // toArray.sortBy here would re-introduce the reference's OOM
-    // ceiling that the scaladoc above claims to remove).
-    val buckets = result.rdd
-      .map(kv => ((Fnv1a.hash(kv.key) % nReduce, kv.key), kv.value))
-      .repartitionAndSortWithinPartitions(new Partitioner {
-        override def numPartitions: Int = nReduce
-        override def getPartition(key: Any): Int = key.asInstanceOf[(Int, String)]._1
-      })
-    val written = sc.runJob(buckets, (ctx: TaskContext, rows: Iterator[((Int, String), String)]) => {
+    if (!result.sparkSession.catalog.functionExists("fnv1a")) VectorExpressions.register(result.sparkSession)
+    val buckets = result.select("key", "value")
+      .repartitionById(nReduce, call_function("fnv1a", col("key")) % nReduce)
+      .sortWithinPartitions("key").queryExecution.toRdd
+    require(buckets.getNumPartitions == nReduce, // one task, so one mr-out-r, per bucket
+      s"sink has ${buckets.getNumPartitions} partitions, not nReduce = $nReduce")
+    val written = sc.runJob(buckets, (ctx: TaskContext, rows: Iterator[InternalRow]) => {
       val file = new Path(path, s"_temporary/mr-out-${ctx.partitionId()}-${ctx.taskAttemptId()}")
       val out = file.getFileSystem(conf.value.value).create(file, false)
-      val line = new org.apache.hadoop.io.Text() // the bytes TextOutputFormat writes
-      try rows.foreach { case ((_, key), value) =>
-        line.set(s"$key $value\n")
-        out.write(line.getBytes, 0, line.getLength)
+      try rows.foreach { row => // (key, value) as UTF-8, the bytes of "key value\n"
+        row.getUTF8String(0).writeTo(out)
+        out.write(' ')
+        row.getUTF8String(1).writeTo(out)
+        out.write('\n')
       } finally out.close()
       file.toString
     })

@@ -1,10 +1,13 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Apps, Engine, KeyValue}
@@ -84,6 +87,37 @@ class EngineSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
+  /** Spark jobs started while `body` runs. The listener bus delivers
+    * events in order, so a marker job before and one after fence them.
+    */
+  private def jobsStartedDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val groups = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+    }
+    def fence(name: String): Int = {
+      sc.setJobGroup(name, name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      var seen = 0
+      var g = groups.poll(60, TimeUnit.SECONDS)
+      while (g != null && g != name) { seen += 1; g = groups.poll(60, TimeUnit.SECONDS) }
+      assert(g === name, s"marker job $name never reached the listener")
+      seen
+    }
+    sc.addSparkListener(listener)
+    try { fence("fence-before"); body; fence("fence-after") }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("mapReduce construction starts no Spark job (queries build plans, not jobs)") {
+    import spark.implicits._
+    val input = spark.createDataset(corpus.take(3)).repartition(3)
+    assert(jobsStartedDuring(input.count()) >= 1, "the fence must see a job that does run")
+    assert(jobsStartedDuring(Engine.mapReduce(spark, input, Apps.WordCount)) === 0)
+  }
+
   test("crash/nocrash data app matches oracle (P7/P8 shape)") {
     assert(runDistributed(Apps.CrashData) === runOracle(Apps.CrashData))
   }
@@ -146,6 +180,34 @@ class EngineSpec extends AnyFunSuite {
       lines
     }
     assert(all.sorted === data.map(kv => s"${kv.key} ${kv.value}").sorted)
+  }
+
+  test("writeText: each mr-out-r is in UTF-8 byte order (Go's sort.Sort(ByKey)), as MrTextSource.write writes it") {
+    import spark.implicits._
+    // U+FF21 is one UTF-16 unit (bytes EF BC A1), U+1D400 a surrogate
+    // pair (F0 9D 90 80): by bytes U+FF21 sorts first, by UTF-16 units last
+    val keys = for (p <- Seq("a", "\uFF21", "\uD835\uDC00"); q <- Seq("", "b", "\uFF21", "\uD835\uDC00"); i <- 1 to 5)
+      yield s"$p$q$i"
+    val data = keys.zipWithIndex.map { case (k, i) => KeyValue(k, i.toString) }
+    val nReduce = 3
+    val tmpA = Files.createTempDirectory("graft-utf8A").toString
+    val tmpB = Files.createTempDirectory("graft-utf8B").toString
+    Engine.writeText(spark.createDataset(data), tmpA, nReduce = nReduce)
+    graft.sources.MrTextSource.write(spark.createDataset(data), tmpB, nReduce = nReduce)
+    val byteOrder: Ordering[String] =
+      (a, b) => java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+    val files = (0 until nReduce).map { r =>
+      val a = Files.readAllBytes(Paths.get(tmpA, s"mr-out-$r"))
+      assert(java.util.Arrays.equals(a, Files.readAllBytes(Paths.get(tmpB, s"mr-out-$r"))),
+        s"mr-out-$r differs from MrTextSource.write")
+      val fileKeys = new String(a, UTF_8).split("\n").toSeq.filter(_.nonEmpty).map(_.split(" ")(0))
+      assert(fileKeys === fileKeys.sorted(byteOrder), s"mr-out-$r is not in UTF-8 byte order")
+      fileKeys.foreach(k => assert(Fnv1a.hash(k) % nReduce === r, s"$k in wrong bucket"))
+      fileKeys
+    }
+    assert(files.flatten.sorted === keys.sorted)
+    // String's own order compares UTF-16 units: it must disagree somewhere
+    assert(files.exists(ks => ks != ks.sorted), "the keys must tell UTF-16 from UTF-8 order")
   }
 
   test("MrTextSource: round-trips the sink, prunes files on bucket pushdown, prunes columns") {
