@@ -1,15 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, HintInfo, LogicalPlan, ResolvedHint}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-
-import graft.functions.MrMapGen
-import graft.functions.VectorExpressions._
 
 /** Catalog knowledge as a Rule[LogicalPlan]: nation (25 rows) and
   * region (5 rows) are FIXED-size dimensions at any corpus scale
@@ -75,12 +70,14 @@ case class ApproxDistinctRewrite(spark: org.apache.spark.sql.SparkSession)
       }
 }
 
-/** SparkSessionExtensions entry point: makes the engine's native
-  * expressions available to ANY session — including plain SQL users —
-  * via `--conf spark.sql.extensions=graft.GraftExtensions`, the same
-  * mechanism a cluster deployment would use. (Runtime registration via
-  * VectorExpressions.register covers sessions created without the
-  * conf.)
+/** SparkSessionExtensions entry point: makes every one of the engine's
+  * native functions (`VectorExpressions.NativeFunctions`) available to
+  * ANY session — including plain SQL users — via
+  * `--conf spark.sql.extensions=graft.GraftExtensions`, the same
+  * mechanism a cluster deployment would use. Each session gets them
+  * when it is built, and `newSession`/`cloneSession` copies keep them.
+  * A session built without the conf can call
+  * `VectorExpressions.register` once instead.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -89,94 +86,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // whole-operator extension (SURVEY §2C path c): the AS-OF join's
     // logical node plans 1:1 to its distribution-aware merge exec
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    e.injectFunction(
-      (
-        FunctionIdentifier("vec_dot"),
-        new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          val e = expect(2, "vec_dot")(exprs); VecDot(e(0), e(1))
-        }
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("vec_norm_sq"),
-        new ExpressionInfo(classOf[VecNormSq].getName, "vec_norm_sq"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          VecNormSq(expect(1, "vec_norm_sq")(exprs).head)
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("md5_sign_bits"),
-        new ExpressionInfo(classOf[Md5SignBits].getName, "md5_sign_bits"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          val e = expect(2, "md5_sign_bits")(exprs); Md5SignBits(e(0), e(1))
-        }
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("hamming_bits"),
-        new ExpressionInfo(classOf[HammingBits].getName, "hamming_bits"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          val e = expect(2, "hamming_bits")(exprs); HammingBits(e(0), e(1))
-        }
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("ascii_window_sums"),
-        new ExpressionInfo(classOf[AsciiWindowSums].getName, "ascii_window_sums"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          val e = expect(2, "ascii_window_sums")(exprs); AsciiWindowSums(e(0), e(1))
-        }
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("sliding_min"),
-        new ExpressionInfo(classOf[SlidingMin].getName, "sliding_min"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          val e = expect(2, "sliding_min")(exprs); SlidingMin(e(0), e(1))
-        }
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("int_vec_sum"),
-        new ExpressionInfo(classOf[IntVecSumAgg].getName, "int_vec_sum"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          IntVecSumAgg(expect(1, "int_vec_sum")(exprs).head)
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("word_ngrams"),
-        new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          val e = expect(2, "word_ngrams")(exprs); WordNgrams(e(0), e(1))
-        }
-      )
-    )
-    e.injectFunction(
-      (
-        FunctionIdentifier("fnv1a"),
-        new ExpressionInfo(classOf[graft.functions.Fnv1a.FnvHash].getName, "fnv1a"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-          graft.functions.Fnv1a.FnvHash(expect(1, "fnv1a")(exprs).head)
-      )
-    )
-    // the kernel's user map as a SQL table function: plugin maps for
-    // SQL-only users (registry names and dynamic dotted class names)
-    e.injectFunction(
-      (
-        FunctionIdentifier("mr_map"),
-        new ExpressionInfo(classOf[MrMapGen].getName, "mr_map"),
-        (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-          val e0 = expect(3, "mr_map")(exprs); MrMapGen(e0(0), e0(1), e0(2))
-        }
-      )
-    )
+    graft.functions.VectorExpressions.NativeFunctions.foreach(e.injectFunction)
   }
 }

@@ -18,8 +18,8 @@ import java.nio.file.{Files, Paths}
   *     queries cuts board wall time several-fold (measured round 9:
   *     the full board's query phase 420 s serial → ~160 s at 8
   *     threads, sf0.001; whole check.py gate incl. DuckDB compare
-  *     2 m 27 s). Shared session state is safe: function registration
-  *     is createOrReplaceTempFunction (idempotent), each artifact is
+  *     2 m 27 s). Shared session state is safe: the native functions
+  *     are injected once when the session is built, each artifact is
   *     a once-cell (concurrent consumers wait for one build, different
   *     artifacts build in parallel), and each query writes its own
   *     output dir.

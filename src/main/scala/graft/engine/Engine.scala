@@ -10,7 +10,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorExpressions
 
 /** Generic MapReduce-on-Spark kernel: capability parity with the
   * reference's fixed dataflow (SURVEY.md §2A, F1–F12).
@@ -120,7 +119,6 @@ object Engine {
     val path = fs.makeQualified(new Path(outDir)) // tasks and driver name the same files
     if (fs.exists(path)) fs.delete(path, true)
     val conf = sc.broadcast(new SerializableWritable(sc.hadoopConfiguration))
-    if (!result.sparkSession.catalog.functionExists("fnv1a")) VectorExpressions.register(result.sparkSession)
     val buckets = result.select("key", "value")
       .repartitionById(nReduce, call_function("fnv1a", col("key")) % nReduce)
       .sortWithinPartitions("key").queryExecution.toRdd

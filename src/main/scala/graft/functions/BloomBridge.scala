@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.util.sketch.BloomFilter
@@ -25,21 +25,6 @@ import org.apache.spark.util.sketch.BloomFilter
   * bits land on the driver.
   */
 object BloomBridge {
-
-  def register(spark: SparkSession): Unit = {
-    val reg = org.apache.spark.sql.classic.ClassicConversions
-      .castToImpl(spark)
-      .sessionState
-      .functionRegistry
-    reg.createOrReplaceTempFunction(
-      "might_contain",
-      exprs => {
-        val e = VectorExpressions.expect(2, "might_contain")(exprs)
-        BloomFilterMightContain(e(0), e(1))
-      },
-      "built-in"
-    )
-  }
 
   /** might_contain(bloom, key): key must be bigint; bloom must be a
     * constant binary (use `serialized` + `lit`).

@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.util.hashing.MurmurHash3
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -156,29 +156,6 @@ object CountMin {
         newLeft: Expression,
         newRight: Expression
     ): CmEstimate = copy(left = newLeft, right = newRight)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = org.apache.spark.sql.classic.ClassicConversions
-      .castToImpl(spark)
-      .sessionState
-      .functionRegistry
-    reg.createOrReplaceTempFunction(
-      "cm_sketch",
-      exprs => {
-        val e = VectorExpressions.expect(3, "cm_sketch")(exprs)
-        CountMinAgg(e(0), e(1), e(2))
-      },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "cm_estimate",
-      exprs => {
-        val e = VectorExpressions.expect(2, "cm_estimate")(exprs)
-        CmEstimate(e(0), e(1))
-      },
-      "built-in"
-    )
   }
 
   def cmSketch(key: Column, d: Column, w: Column): Column =

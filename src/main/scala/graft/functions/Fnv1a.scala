@@ -80,8 +80,8 @@ object Fnv1a {
       copy(child = newChild)
   }
 
-  /** Column form (requires VectorExpressions.register or the
-    * GraftExtensions conf, which register `fnv1a`).
+  /** Column form: `fnv1a` comes from `VectorExpressions.NativeFunctions`,
+    * which every GraftExtensions session has.
     */
   def fnv1a(c: Column): Column =
     org.apache.spark.sql.functions.call_function("fnv1a", c)

@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -203,21 +203,6 @@ object KllSketch {
         s: Expression,
         t: Expression
     ): KllQuantilesAgg = copy(first = f, second = s, third = t)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = org.apache.spark.sql.classic.ClassicConversions
-      .castToImpl(spark)
-      .sessionState
-      .functionRegistry
-    reg.createOrReplaceTempFunction(
-      "kll_quantiles",
-      exprs => {
-        val e = VectorExpressions.expect(3, "kll_quantiles")(exprs)
-        KllQuantilesAgg(e(0), e(1), e(2))
-      },
-      "built-in"
-    )
   }
 
   def kllQuantiles(value: Column, k: Column, qs: Column): Column =

@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -224,21 +224,6 @@ object SpaceSaving {
         newLeft: Expression,
         newRight: Expression
     ): SpaceSavingAgg = copy(left = newLeft, right = newRight)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = org.apache.spark.sql.classic.ClassicConversions
-      .castToImpl(spark)
-      .sessionState
-      .functionRegistry
-    reg.createOrReplaceTempFunction(
-      "space_saving",
-      exprs => {
-        val e = VectorExpressions.expect(2, "space_saving")(exprs)
-        SpaceSavingAgg(e(0), e(1))
-      },
-      "built-in"
-    )
   }
 
   def spaceSaving(key: Column, capacity: Column): Column =

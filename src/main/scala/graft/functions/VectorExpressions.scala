@@ -1,9 +1,13 @@
 package graft.functions
 
+import scala.reflect.{ClassTag, classTag}
+
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain,
+  Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -935,14 +939,6 @@ object VectorExpressions {
     ): Expression = copy(left = newLeft, right = newRight)
   }
 
-  /** Register the expressions in the session's function registry
-    * (idempotent). The Column/Expression bridge objects are
-    * private[sql] in Spark 4, so the public path to a custom
-    * Expression is registry + call_function.
-    */
-  /** Arity guard for registry builders (otherwise a wrong-arity SQL
-    * call dies with a bare IndexOutOfBounds).
-    */
   /** Upper-triangle outer-product values of an array<float> vector:
     * result[pos] = (double) a[i] * (double) a[j] for i ≤ j in
     * i-major lexicographic order, pos = i·n − i(i−1)/2 + (j − i).
@@ -1007,6 +1003,9 @@ object VectorExpressions {
       copy(child = newChild)
   }
 
+  /** Arity guard for registry builders (otherwise a wrong-arity SQL
+    * call dies with a bare IndexOutOfBounds).
+    */
   def expect(n: Int, name: String)(
       exprs: Seq[Expression]
   ): Seq[Expression] = {
@@ -1014,111 +1013,59 @@ object VectorExpressions {
     exprs
   }
 
+  /** Every native SQL function of the engine, one entry each: the
+    * name, an `ExpressionInfo` naming the expression class, and a
+    * builder that checks arity through [[expect]]. GraftExtensions
+    * injects the table into every session it builds. The
+    * Column/Expression bridge objects are private[sql] in Spark 4, so
+    * the public path to a custom Expression is registry + call_function.
+    */
+  val NativeFunctions
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = {
+    def fn[T <: Expression: ClassTag](name: String, arity: Int, build: Seq[Expression] => T) =
+      (FunctionIdentifier(name), new ExpressionInfo(classTag[T].runtimeClass.getName, name),
+        (exprs: Seq[Expression]) => build(expect(arity, name)(exprs)))
+    Seq(
+      fn("vec_dot", 2, e => VecDot(e(0), e(1))),
+      fn("vec_norm_sq", 1, e => VecNormSq(e(0))),
+      fn("md5_sign_bits", 2, e => Md5SignBits(e(0), e(1))),
+      fn("hamming_bits", 2, e => HammingBits(e(0), e(1))),
+      fn("ascii_window_sums", 2, e => AsciiWindowSums(e(0), e(1))),
+      fn("sliding_min", 2, e => SlidingMin(e(0), e(1))),
+      fn("int_vec_sum", 1, e => IntVecSumAgg(e(0))),
+      fn("fnv1a", 1, e => Fnv1a.FnvHash(e(0))),
+      fn("word_ngrams", 2, e => WordNgrams(e(0), e(1))),
+      fn("zorder64", 2, e => ZOrder64(e(0), e(1))),
+      fn("outer_products", 1, e => OuterProducts(e(0))),
+      fn("hilbert64", 2, e => Hilbert64(e(0), e(1))),
+      // the kernel's user map as a SQL table function: plugin maps for
+      // SQL-only users (registry names and dynamic dotted class names)
+      fn("mr_map", 3, e => MrMapGen(e(0), e(1), e(2))),
+      fn("phash64", 2, e => Phash64(e(0), e(1))),
+      fn("simhash64", 1, e => SimHash64(e(0))),
+      fn("minhash_sigs", 2, e => MinHashSigs(e(0), e(1))),
+      fn("shingle_hashes", 2, e => ShingleHashes(e(0), e(1))),
+      fn("hashgram_score", 1, e => HashgramScoreExpr(e(0))),
+      fn("span_corrupt", 2, e => SpanCorruptExpr(e(0), e(1))),
+      fn("c64_log2", 1, e => C64Expr(e(0))),
+      fn("space_saving", 2, e => SpaceSaving.SpaceSavingAgg(e(0), e(1))),
+      fn("kll_quantiles", 3, e => KllSketch.KllQuantilesAgg(e(0), e(1), e(2))),
+      fn("cm_sketch", 3, e => CountMin.CountMinAgg(e(0), e(1), e(2))),
+      fn("cm_estimate", 2, e => CountMin.CmEstimate(e(0), e(1))),
+      fn("might_contain", 2, e => BloomFilterMightContain(e(0), e(1))))
+  }
+
+  /** Registers the [[NativeFunctions]] a session's registry lacks: the
+    * fallback for a session built without the GraftExtensions conf.
+    * On a session built with it, this registers (and logs) nothing.
+    */
   def register(spark: SparkSession): Unit = {
     val reg = org.apache.spark.sql.classic.ClassicConversions
       .castToImpl(spark)
       .sessionState
       .functionRegistry
-    reg.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => { val e = expect(2, "vec_dot")(exprs); VecDot(e(0), e(1)) },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "vec_norm_sq",
-      exprs => VecNormSq(expect(1, "vec_norm_sq")(exprs).head),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "md5_sign_bits",
-      exprs => { val e = expect(2, "md5_sign_bits")(exprs); Md5SignBits(e(0), e(1)) },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "hamming_bits",
-      exprs => { val e = expect(2, "hamming_bits")(exprs); HammingBits(e(0), e(1)) },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "ascii_window_sums",
-      exprs => { val e = expect(2, "ascii_window_sums")(exprs); AsciiWindowSums(e(0), e(1)) },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "sliding_min",
-      exprs => { val e = expect(2, "sliding_min")(exprs); SlidingMin(e(0), e(1)) },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "int_vec_sum",
-      exprs => IntVecSumAgg(expect(1, "int_vec_sum")(exprs).head),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "fnv1a",
-      exprs => Fnv1a.FnvHash(expect(1, "fnv1a")(exprs).head),
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "word_ngrams",
-      exprs => { val e = expect(2, "word_ngrams")(exprs); WordNgrams(e(0), e(1)) },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "zorder64",
-      exprs => { val e = expect(2, "zorder64")(exprs); ZOrder64(e(0), e(1)) },
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "outer_products",
-      exprs => OuterProducts(expect(1, "outer_products")(exprs).head),
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "hilbert64",
-      exprs => { val e = expect(2, "hilbert64")(exprs); Hilbert64(e(0), e(1)) },
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "mr_map",
-      exprs => { val e = expect(3, "mr_map")(exprs); MrMapGen(e(0), e(1), e(2)) },
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "phash64",
-      exprs => { val e = expect(2, "phash64")(exprs); Phash64(e(0), e(1)) },
-      "built-in"
-    )
-    reg.createOrReplaceTempFunction(
-      "simhash64",
-      exprs => SimHash64(expect(1, "simhash64")(exprs).head),
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "minhash_sigs",
-      exprs => { val e = expect(2, "minhash_sigs")(exprs); MinHashSigs(e(0), e(1)) },
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "shingle_hashes",
-      exprs => { val e = expect(2, "shingle_hashes")(exprs); ShingleHashes(e(0), e(1)) },
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "hashgram_score",
-      exprs => HashgramScoreExpr(expect(1, "hashgram_score")(exprs).head),
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "span_corrupt",
-      exprs => { val e = expect(2, "span_corrupt")(exprs); SpanCorruptExpr(e(0), e(1)) },
-      "built-in"
-    )
-  reg.createOrReplaceTempFunction(
-      "c64_log2",
-      exprs => C64Expr(expect(1, "c64_log2")(exprs).head),
-      "built-in"
-    )
+    for ((id, info, build) <- NativeFunctions if !reg.functionExists(id))
+      reg.registerFunction(id, info, build)
   }
 
   def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)

@@ -78,7 +78,6 @@ object DedupOps {
     */
   private def shingleDocHashes(spark: SparkSession, dir: String): DataFrame =
     Artifacts.stage(spark, dir, "shingle_hashes") {
-      graft.functions.VectorExpressions.register(spark)
       Tables
         .documents(spark, dir)
         // documents is one small file = one partition; spread the
@@ -156,7 +155,6 @@ object DedupOps {
       docSigsKernelBuild(spark, dir))
 
   private[graft] def docSigsKernelBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val toks = TextOps.tokens(lower(col("text")))
     Tables
       .documents(spark, dir)
@@ -433,7 +431,6 @@ object DedupOps {
       simhashBuild(spark, dir))
 
   private[graft] def simhashBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val toks = TextOps.tokens(lower(col("text")))
     // ZERO-shuffle fingerprint: the codegen `simhash64` kernel
     // (SimHashKernel — one md5 per DISTINCT token, count-weighted,
@@ -466,7 +463,6 @@ object DedupOps {
     Artifacts.memo(spark, dir, "simhash_pairs")(simhashPairsBuild(spark, dir))
 
   private[graft] def simhashPairsBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     // The banded self-join consumes fp twice; the staged simhash_fp
     // parquet (see simhash) is the shared materialization.
     val fp = simhash(spark, dir)
@@ -520,7 +516,6 @@ object DedupOps {
     decontamPostingN(spark, dir, DecontamN)
 
   private def decontamPostingN(spark: SparkSession, dir: String, n: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     // shingle_hashes kernel + row-local array_distinct: the corpus
     // distinct() shuffle is gone (split is a per-doc constant, so
     // (doc, split, h) distinctness IS per-row distinctness), and the
@@ -861,7 +856,6 @@ object DedupOps {
   val DecontamSweepNs = Seq(4, 8, 13)
 
   def decontamNgramSweep(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     // ONE corpus scan feeds all three widths: each row carries its
     // 4/8/13-gram hash arrays side by side (three kernel calls over
     // one scan's rows), checkpointed once — at 100 TB this is one
@@ -980,7 +974,6 @@ object DedupOps {
     * materialized once and feeds the bloom build + both join sides.
     */
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomBridge.register(spark)
     val posting = decontamPosting(spark, dir).localCheckpoint()
     val train = posting
       .filter(col("split") === "train")
@@ -1024,7 +1017,6 @@ object DedupOps {
     * unit spec instead, which plants a half-copied document.
     */
   def spanDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val blocks = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1321,7 +1313,6 @@ object DedupOps {
     * BIGINT in both engines.
     */
   private def winnowed(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     // codegen shingle_hashes kernel — the old transform() lambda ran
     // interpreted (one boxed md5 expression eval per shingle)
     val hs = graft.functions.VectorExpressions
@@ -1438,7 +1429,6 @@ object DedupOps {
       spanRewriteBuild(spark, dir))
 
   private[graft] def spanRewriteBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val docs = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1539,7 +1529,6 @@ object DedupOps {
       spanRewriteAnyAlignBuild(spark, dir))
 
   private[graft] def spanRewriteAnyAlignBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val docs = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1754,7 +1743,6 @@ object DedupOps {
   val DupRateN = 8
 
   def ngramDupRate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val grams = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)

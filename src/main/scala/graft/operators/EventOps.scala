@@ -163,7 +163,6 @@ object EventOps {
     * scan for the exact-rank counts (pass 2) — no sort anywhere.
     */
   def kllValueQuantiles(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.KllSketch.register(spark)
     val targets = Seq(0.5, 0.95, 0.99)
     val eps = 0.05
     val ests = Tables
@@ -220,7 +219,6 @@ object EventOps {
     * row against the whole table, in the same second pass.
     */
   def kllSources(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.KllSketch.register(spark)
     val targets = Seq(0.5, 0.9)
     val eps = 0.05
     val ests = Tables

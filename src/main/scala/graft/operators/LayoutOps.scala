@@ -42,7 +42,6 @@ object LayoutOps {
     * write gives every file it lays down.
     */
   def zorderLayout(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val dim = lit(1L << ZDimBits)
     Tables
       .orders(spark, dir)
@@ -71,7 +70,6 @@ object LayoutOps {
     * this directly.
     */
   def zorderPartitioned(spark: SparkSession, dir: String, nParts: Int): DataFrame = {
-    VectorExpressions.register(spark)
     val dim = lit(1L << ZDimBits)
     Tables
       .orders(spark, dir)
@@ -95,7 +93,6 @@ object LayoutOps {
     * map (`hilbert64`) + one hash aggregate.
     */
   def hilbertLayout(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val dim = lit(1L << ZDimBits)
     Tables
       .orders(spark, dir)

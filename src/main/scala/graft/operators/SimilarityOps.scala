@@ -36,7 +36,6 @@ object SimilarityOps {
   val TopK = 5
 
   private def emb(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables.embeddings(spark, dir)
   }
 
@@ -1815,7 +1814,6 @@ object SimilarityOps {
     * #queries rows. Zero corpus passes.
     */
   def retrievalNdcg(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     def gain(r: String): Column =
       expr(s"CAST(64000000000 DIV c64_log2($r + 1) AS BIGINT)")
     val truth = bruteForceTopK(spark, dir).select(col("query_id"), col("neighbor_id"))

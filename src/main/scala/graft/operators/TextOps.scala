@@ -67,7 +67,6 @@ object TextOps {
     * the kernel's (word, "1")-per-occurrence exchange.
     */
   def wordCountViaSqlMap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -788,7 +787,6 @@ object TextOps {
     * skew is bounded by the vocabulary's most-followed token.
     */
   def bigramTransitions(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val counts = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -879,7 +877,6 @@ object TextOps {
     * the label_centroids discipline), and MIN(p) needs no care.
     */
   def lmDocScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val bigrams = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1079,7 +1076,6 @@ object TextOps {
     * buffer (see functions/SpaceSaving.scala for the guarantees).
     */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SpaceSaving.register(spark)
     Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1348,7 +1344,6 @@ object TextOps {
     * one-row sketch, never per corpus row.
     */
   def cmTokenCounts(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CountMin.register(spark)
     val toks = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1474,7 +1469,6 @@ object TextOps {
     * tie-broken (lift, head, nxt) ordering keeps top-k deterministic.
     */
   def pmiPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val bg = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1577,7 +1571,6 @@ object TextOps {
   val DsirBuckets = 64
 
   def dsirImportance(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val feats = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1624,7 +1617,6 @@ object TextOps {
     * carried in one exchange instead of three scans.
     */
   def ngramDiversity(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val base = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -1961,7 +1953,6 @@ object TextOps {
     * reuse it — this query IS that posting-build + probe, fused.
     */
   def phraseHits(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     def bigrams = Tables
       .documents(spark, dir)
       .select(
@@ -2263,8 +2254,8 @@ object TextOps {
 
   /** The fit loop at a CONFIGURABLE merge count and corpus sample —
     * the realistic-scale path (the gate contract stays at
-    * [[BpeMerges]] unsampled; `graft.BpeCurve` drives this to publish
-    * the per-round cost curve in BASELINE.md). Returns the merge
+    * [[BpeMerges]] unsampled; `graft.tools.Profile bpe` drives this to
+    * publish the per-round cost curve in BASELINE.md). Returns the merge
     * table, the final type sequences, and per-round wall seconds.
     *
     * `sampleBuckets < 100` trains on the deterministic md5 id-bucket
@@ -3259,7 +3250,6 @@ object TextOps {
     * prune as [[weightedSample]].
     */
   def weightedSampleAes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val c64 = graft.functions.VectorExpressions.c64Log2 _
     val w = Window
       .partitionBy(col("source"))
@@ -4422,7 +4412,6 @@ object TextOps {
     * should run.
     */
   def hashgramScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables
       .documents(spark, dir)
       .select(
@@ -4930,7 +4919,6 @@ object TextOps {
     * sheet the oracle verifies.
     */
   private[graft] def hashgramGateProjection(df: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(df.sparkSession)
     df
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), col("source"), hashgramScoreCol.as("score"))
@@ -4956,7 +4944,6 @@ object TextOps {
     * (`perceptronEpoch`).
     */
   private[graft] def hashgramBins(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables
       .documents(spark, dir)
       .select(col("source"), tokens(col("text")).as("toks"))
@@ -5092,7 +5079,6 @@ object TextOps {
     * five conditional sums over that frame.
     */
   def classifierYieldSweep(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val bins = Tables
       .documents(spark, dir)
       .select(tokens(col("text")).as("toks"))
@@ -5150,7 +5136,6 @@ object TextOps {
     * aggregate per source, then pure arithmetic on #sources rows.
     */
   def classifierKappa(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables
       .documents(spark, dir)
       .select(col("source"), col("text"), tokens(col("text")).as("toks"))
@@ -5389,7 +5374,6 @@ object TextOps {
     * the gate that proves the draw.
     */
   private[graft] def spanCorrStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables
       .documents(spark, dir)
       .select(col("doc_id"), col("source"), tokens(col("text")).as("toks"))
@@ -5665,7 +5649,6 @@ object TextOps {
     * n_docs is the corpus count, not the gram-bearing count.
     */
   def topNgramMass(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val base = repDocs(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"), col("source"), tokens(lower(col("text"))).as("toks"))
@@ -5944,7 +5927,6 @@ object TextOps {
     * .PplGateStream.modelIndex]]'s loud collision guard.
     */
   private[graft] def knModel(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val types = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -6045,7 +6027,6 @@ object TextOps {
       knDocPplBuild(spark, dir))
 
   private[graft] def knDocPplBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val perDoc = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -6135,7 +6116,6 @@ object TextOps {
     * times); the #docs-bounded tail slices ride the same shuffle.
     */
   private[graft] def knRawBase(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -6256,7 +6236,6 @@ object TextOps {
     * are identical to the per-order explode they replace).
     */
   private[graft] def kn3ModelFrom(spark: SparkSession, raw3: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val types = raw3
       .select(col("g").as("tg"), col("cnt").as("c_uvw"))
       .select(
@@ -6362,7 +6341,6 @@ object TextOps {
       spark: SparkSession,
       dir: String,
       model: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val perDoc = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -6467,7 +6445,6 @@ object TextOps {
       n: Int,
       mat: DataFrame => DataFrame = identity): Map[Int, DataFrame] = {
     require(n >= 3, s"knNLevels ships orders >= 3 (order 2 is knModel): $n")
-    graft.functions.VectorExpressions.register(spark)
     val types = raw.select(col("g"), col("cnt"))
     // adjusted-count tables: aTab(n) = raw type counts; aTab(k) =
     // distinct-left-extension counts over the level-(k+1) types
@@ -6794,7 +6771,6 @@ object TextOps {
       n: Int,
       model: DataFrame
   ): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val perDoc = Tables
       .documents(spark, dir)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -6870,7 +6846,6 @@ object TextOps {
     * product can floor to zero), the guard replayed by the oracle.
     */
   def kn5PrunedDocPpl(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val shift = 1L << KnQpShift
     val art = kn5PrunedArtifact(spark, dir)
     def fpOf(c: Column) = conv(substring(md5(c), 1, 15), 16, 10).cast("bigint")
@@ -6969,7 +6944,6 @@ object TextOps {
     * is #sources x 4 rows).
     */
   def knOrderCurve(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     // round 11: ONE corpus explode emits every order's doc grams
     // (tagged (ord, fp)) and ONE equi-join against the four models
     // unioned on (ord, fp) replaces the four separate scoring passes —
@@ -7102,7 +7076,6 @@ object TextOps {
     * bucket) ever shuffles.
     */
   private def dsirGrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val toks = tokens(lower(col("text")))
     Tables
       .documents(spark, dir)
@@ -7308,7 +7281,6 @@ object TextOps {
     * and N rides the same ledger (no second corpus pass).
     */
   def dsirSelectGlobal(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     RankOps
       .withGroupRankAndCount(
         dsirGumbelKeys(dsirDocScores(spark, dir)),
@@ -7346,7 +7318,6 @@ object TextOps {
     * per policy (both RankOps compositions), one #sources aggregate.
     */
   def dsirSelectAgreement(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val strat = RankOps
       .withGroupRankAndCount(
         dsirGumbelKeys(dsirDocScores(spark, dir)),
@@ -7401,7 +7372,6 @@ object TextOps {
     * doc_id in the key), one doc-keyed fold, one #sources aggregate.
     */
   def tokenEntropyGate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val c64 = graft.functions.VectorExpressions.c64Log2 _
     val perDoc = Tables
       .documents(spark, dir)

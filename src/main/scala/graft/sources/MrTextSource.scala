@@ -103,7 +103,6 @@ object MrTextSource {
       nReduce: Int = 10
   ): Unit = {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(ds.sparkSession)
     ds.select(
       expr(s"CAST(fnv1a(key) % $nReduce AS INT)").as("bucket"),
       col("key"),

@@ -98,7 +98,6 @@ object MultimodalOps {
     // ascii_window_sums expression (one pass over the payload);
     // the old aggregate/transform/substring HOF nest was interpreted
     // and allocated a boxed single-char substring per byte.
-    graft.functions.VectorExpressions.register(spark)
     Tables
       .documents(spark, dir)
       .select(
@@ -141,7 +140,6 @@ object MultimodalOps {
     * pHash-vs-aHash audit (which hashes the gradient-twin corpus).
     */
   private[graft] def aHashOf(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     docs
       .withColumn("w", expr(s"length(text) DIV $AHashPixels"))
       .filter(col("w") >= 1)
@@ -188,7 +186,6 @@ object MultimodalOps {
       mediaFingerprintsBuild(spark, dir))
 
   private[graft] def mediaFingerprintsBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     phashDocs(spark, dir)
       // documents is one small file = one partition; spread the
       // ramp/window-sum work (at real scale the scan is already split)
@@ -230,7 +227,6 @@ object MultimodalOps {
     graft.operators.Artifacts.memo(spark, dir, "ahash_pairs")(aHashPairsBuild(spark, dir))
 
   private[graft] def aHashPairsBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     // staged fused fingerprints; base corpus rows are the twin table
     // below the twin-id offset (their text is unchanged by the union)
     val fp = mediaFingerprints(spark, dir)
@@ -310,7 +306,6 @@ object MultimodalOps {
     * aHash.
     */
   private[graft] def phashOf(docs: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
     docs
       .withColumn("w", expr(s"length(text) DIV $AHashPixels"))
       .filter(col("w") >= 1)
@@ -339,7 +334,6 @@ object MultimodalOps {
     graft.operators.Artifacts.memo(spark, dir, "phash_pairs")(phashPairsBuild(spark, dir))
 
   private[graft] def phashPairsBuild(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val fp = mediaFingerprints(spark, dir).select(col("media_id"), col("phash"))
     val banded = fp.select(
       col("media_id"),
@@ -704,14 +698,14 @@ object MultimodalOps {
     * [[aHash]].
     */
   def mmAudioVad(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     vadProjection(Tables.documents(spark, dir))
   }
 
   /** The VAD gate as a reusable projection over (doc_id, text) — ONE
     * definition, two transports: [[mmAudioVad]] and the ingest stream
-    * (`streaming.VadStream`) plan exactly these Columns. Caller must
-    * have registered the graft SQL functions (`ascii_window_sums`).
+    * (`streaming.VadStream`) plan exactly these Columns. Needs the
+    * graft SQL functions (`ascii_window_sums`) that GraftExtensions
+    * injects.
     */
   private[graft] def vadProjection(docs: DataFrame): DataFrame = {
     docs

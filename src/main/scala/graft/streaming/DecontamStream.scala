@@ -61,7 +61,6 @@ object DecontamStream {
     */
   def flags(spark: SparkSession, streamDir: String, benchDir: String): Dataset[LeakRow] = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val idx = benchmarkIndex(spark, benchDir)
     val bc = spark.sparkContext.broadcast(idx)
     val toks = graft.operators.TextOps.tokens(lower(col("text")))

@@ -53,7 +53,6 @@ object DsirGateStream {
     */
   def scored(spark: SparkSession, streamDir: String, refDir: String): Dataset[DsirRow] = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val nb = graft.operators.TextOps.DsirLambdaBuckets
     val bc = spark.sparkContext.broadcast(lambdaIndex(spark, refDir))
     val toks = graft.operators.TextOps.tokens(lower(col("text")))

@@ -83,7 +83,6 @@ object MinHashDupStream {
     */
   def pairs(spark: SparkSession, dir: String): Dataset[NearPair] = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val toks = graft.operators.TextOps.tokens(lower(col("text")))
     val bandArray = array((0 until graft.operators.DedupOps.MinhashBands).map { b =>
       concat_ws(",",

@@ -79,7 +79,6 @@ object NearDupStream {
     */
   def pairs(spark: SparkSession, dir: String): Dataset[NearPair] = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val toks = graft.operators.TextOps.tokens(lower(col("text")))
     spark.readStream
       .schema(DedupStream.docsSchema)

@@ -105,7 +105,6 @@ object PplGateStream {
     */
   def scored(spark: SparkSession, streamDir: String, refDir: String): Dataset[PplRow] = {
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val bc = spark.sparkContext.broadcast(modelIndex(spark, refDir))
     val toks = graft.operators.TextOps.tokens(lower(col("text")))
     spark.readStream

@@ -25,7 +25,6 @@ object SketchStream {
     * corpus, one row per language per trigger (Complete mode).
     */
   def heavyHittersByLang(spark: SparkSession, dir: String, capacity: Int): DataFrame = {
-    graft.functions.SpaceSaving.register(spark)
     spark.readStream
       .schema(DedupStream.docsSchema)
       .option("maxFilesPerTrigger", "1")
@@ -39,7 +38,6 @@ object SketchStream {
     * listing (schema-pinned batch read of the stream's directory).
     */
   def heavyHittersByLangBatch(spark: SparkSession, dir: String, capacity: Int): DataFrame = {
-    graft.functions.SpaceSaving.register(spark)
     spark.read
       .schema(DedupStream.docsSchema)
       .parquet(dir)

@@ -30,7 +30,6 @@ object VadStream {
     * (each file = one ingest micro-batch).
     */
   def gated(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
     val raw = spark.readStream
       .schema(DedupStream.docsSchema)
       .option("pathGlobFilter", "*.parquet")

@@ -502,7 +502,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("hilbert64: full-curve bijection, unit-step adjacency, tighter spans than Z") {
-    graft.functions.VectorExpressions.register(spark)
     // the whole 1024x1024 domain: d must visit every cell exactly once
     // (bijection) and consecutive d's must be GRID NEIGHBORS — the
     // locality property Z-order lacks
@@ -590,7 +589,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("simhash64 kernel: equals the count-weighted aggregate formula, null guard") {
-    graft.functions.VectorExpressions.register(spark)
     // the retired aggregate pipeline, recomputed as the reference:
     // sum over DISTINCT tokens of count x (+-1 per md5 bit), sign at >= 0
     import spark.implicits._
@@ -627,7 +625,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("outer_products: values, ordering, and the null-element guard") {
-    graft.functions.VectorExpressions.register(spark)
     val r = spark.sql(
       "SELECT outer_products(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT), CAST(3.0 AS FLOAT)))"
     ).collect()(0).getSeq[Double](0)
@@ -810,6 +807,12 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("native expressions are SQL-visible via GraftExtensions") {
+    // every table entry reaches a fresh session with no register call
+    val names = graft.functions.VectorExpressions.NativeFunctions.map(_._1.funcName)
+    assert(names.distinct.size === names.size)
+    val fresh = spark.newSession()
+    val missing = names.filterNot(n => fresh.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not injected by GraftExtensions: ${missing.mkString(", ")}")
     val r = spark.sql(
       "SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d, " +
@@ -821,9 +824,38 @@ class OperatorsSpec extends AnyFunSuite {
     assert(r.getInt(2) === graft.functions.Fnv1a.hash("foobar"))
   }
 
+  test("native functions: building and running queries logs no replaced-function warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val replaced = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new AbstractAppender("replaced-function", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("replaced a previously registered function"))
+          replaced.incrementAndGet()
+    }
+    appender.start()
+    val logger = LogManager
+      .getLogger("org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try {
+      // perfbench's llm_pipeline queries, and the engine's word count
+      Seq("decontaminate", "simhash_calibration", "dsir_doc_scores", "mm_ahash_pairs",
+        "bpe_encode", "wc_kernel").foreach { q =>
+        SparkEntry.queries(q)(spark, Sf0001).write.format("noop").mode("overwrite").save()
+      }
+      graft.functions.VectorExpressions.register(spark)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+    assert(replaced.get === 0)
+  }
+
   test("fnv1a codegen expression == the JVM hash on every kernel output key") {
     import org.apache.spark.sql.functions.col
-    graft.functions.VectorExpressions.register(spark)
     val words = TextOps.wordCount(spark, Sf0001)
       .select(col("word"), graft.functions.Fnv1a.fnv1a(col("word")).as("h"))
       .collect()
@@ -832,7 +864,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("ascii_window_sums == the HOF aggregate/substring form on the corpus") {
-    graft.functions.VectorExpressions.register(spark)
     // unit vectors first: windows, trailing drop, win<1 guard, unicode
     val u = spark.sql(
       "SELECT ascii_window_sums('abcd', 2) AS w2, " +   // [97+98, 99+100]
@@ -863,7 +894,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("sliding_min == the HOF transform/slice form; deque edge cases") {
-    graft.functions.VectorExpressions.register(spark)
     val u = spark.sql(
       "SELECT sliding_min(array(5L,3L,4L,1L,2L), 3) AS a, " + // [3,1,1]
         "sliding_min(array(7L,7L,7L), 1) AS b, " +            // identity
@@ -913,7 +943,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("word_ngrams: consecutive space-joined n-grams, empty below n tokens") {
-    graft.functions.VectorExpressions.register(spark)
     val r = spark.sql(
       "SELECT word_ngrams(array('a','b','c','d'), 3) AS g3, " +
         "word_ngrams(array('a','b'), 3) AS empty, " +
@@ -1024,7 +1053,6 @@ class OperatorsSpec extends AnyFunSuite {
   test("embedding near-dup: no false positives, recall vs the exact half-matrix") {
     import org.apache.spark.sql.functions._
     import graft.functions.VectorFunctions._
-    graft.functions.VectorExpressions.register(spark)
     // exact half-matrix ground truth — test-only; the operator itself
     // must never do this (its plan is asserted exchange-equi-join only)
     val e = Tables.embeddings(spark, Sf0001)
@@ -1562,7 +1590,6 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("space_saving: heavy-hitter guarantees hold saturated, exact unsaturated") {
     import spark.implicits._
-    graft.functions.SpaceSaving.register(spark)
     // skewed stream: a:50 b:30 c:20 + 20 singletons, deterministic shuffle
     val tokens = (Seq.fill(50)("a") ++ Seq.fill(30)("b") ++ Seq.fill(20)("c") ++
       (0 until 20).map(i => s"u$i")).sortBy(t => (t.hashCode * 2654435761L) & 0xffffffffL)
@@ -2317,7 +2344,6 @@ class OperatorsSpec extends AnyFunSuite {
 
   test("count-min: merge-order invariant, never undercounts, collision-bounded") {
     import spark.implicits._
-    graft.functions.CountMin.register(spark)
     // 3000 distinct keys into 4x64 counters — heavy collisions by design
     val keys = (0 until 3000).flatMap(i => Seq.fill(i % 7 + 1)(s"k$i"))
     val truth = keys.groupBy(identity).view.mapValues(_.length.toLong).toMap
@@ -2359,7 +2385,6 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("zorder64: codegen interleave matches a bit-by-bit reference") {
-    graft.functions.VectorExpressions.register(spark)
     // deterministic pseudo-random probe values incl. the mask edges
     val probes = (0 until 200).map { i =>
       val x = (i * 2654435761L) & 0xFFFFFFFFL
@@ -7358,7 +7383,6 @@ class OperatorsSpec extends AnyFunSuite {
   test("kneser-ney bigram LM matches an exact rational recompute") {
     // the c64_log2 codegen expression is the kernel, distributed
     import spark.implicits._
-    graft.functions.VectorExpressions.register(spark)
     val vs = Seq(1L, 2L, 3L, 1023L, 1024L, (1L << 50) - 7, 1L << 50)
     val exprGot = vs.toDF("v")
       .selectExpr("v", "c64_log2(v) AS c")

@@ -131,7 +131,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming MR sink: per-epoch snapshots, idempotent commit, reader-compatible layout") {
     import org.apache.spark.sql.functions._
-    graft.functions.VectorExpressions.register(spark)
     val out = java.nio.file.Files.createTempDirectory("mr-stream-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("mr-stream-ckpt").toString
     val q = spark.readStream
