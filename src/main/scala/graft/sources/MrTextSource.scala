@@ -416,8 +416,12 @@ private[sources] case class MrTextPartition(file: String, bucket: Int) extends I
   * CLUSTERED by `bucket` and SORTED by (bucket, key)
   * (`RequiresDistributionAndOrdering`), and the planner inserts the
   * shuffle + spillable sort itself — the declarative twin of
-  * Engine.writeText's `repartitionById` + `sortWithinPartitions`, with
-  * the same no-in-heap-materialization property at scale. Each task then
+  * Engine.writeText's generic path (`repartitionById` +
+  * `sortWithinPartitions` over the rows as given), with the same
+  * no-in-heap-materialization property at scale. It writes the rows it
+  * is given: unlike writeText on an `Engine.run` result, it cannot fold
+  * a job's reduce into its write tasks, so a job written here shuffles
+  * twice (reduce, then buckets). Each task then
   * streams contiguous bucket runs into `mr-out-<bucket>` files (the
   * reference's own names, mr/worker.go:60-61); the
   * driver commit fills in empty buckets ([0, nreduce)) and `_SUCCESS`,

@@ -7,7 +7,9 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.SparkFirehoseListener
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.{Apps, Engine, KeyValue}
@@ -87,28 +89,66 @@ class EngineSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.shuffle.partitions", before)
   }
 
-  /** Spark jobs started while `body` runs. The listener bus delivers
+  /** Listener events posted while `body` runs. The listener bus delivers
     * events in order, so a marker job before and one after fence them.
     */
-  private def jobsStartedDuring(body: => Any): Int = {
+  private def eventsDuring(body: => Any): Seq[SparkListenerEvent] = {
     val sc = spark.sparkContext
-    val groups = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.put(Option(e.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
+    val events = new LinkedBlockingQueue[SparkListenerEvent]()
+    val listener = new SparkFirehoseListener {
+      override def onEvent(e: SparkListenerEvent): Unit = events.put(e)
     }
-    def fence(name: String): Int = {
+    // runs a marker job; returns the events queued before it and drops its own
+    def fence(name: String): Seq[SparkListenerEvent] = {
       sc.setJobGroup(name, name)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      var seen = 0
-      var g = groups.poll(60, TimeUnit.SECONDS)
-      while (g != null && g != name) { seen += 1; g = groups.poll(60, TimeUnit.SECONDS) }
-      assert(g === name, s"marker job $name never reached the listener")
-      seen
+      def next(): SparkListenerEvent = {
+        val e = events.poll(60, TimeUnit.SECONDS)
+        assert(e != null, s"marker job $name never reached the listener")
+        e
+      }
+      def markerStart(e: SparkListenerEvent) = e match {
+        case j: SparkListenerJobStart => Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == name)
+        case _ => false
+      }
+      val before = Vector.newBuilder[SparkListenerEvent]
+      var e = next()
+      while (!markerStart(e)) { before += e; e = next() }
+      val marker = e.asInstanceOf[SparkListenerJobStart].jobId
+      while (!(e match { case j: SparkListenerJobEnd => j.jobId == marker; case _ => false })) e = next()
+      before.result()
     }
     sc.addSparkListener(listener)
     try { fence("fence-before"); body; fence("fence-after") }
     finally sc.removeSparkListener(listener)
+  }
+
+  private def jobsStartedDuring(body: => Any): Int =
+    eventsDuring(body).count(_.isInstanceOf[SparkListenerJobStart])
+
+  /** The stages `body` ran, in completion order. */
+  private def stagesRunDuring(body: => Any): Seq[StageInfo] =
+    eventsDuring(body).collect { case s: SparkListenerStageCompleted => s.stageInfo }
+
+  /** Each entry `writeText` left in `dir`, checksum files aside: name → bytes. */
+  private def outputFiles(dir: String): Map[String, Seq[Byte]] =
+    Files.list(Paths.get(dir)).iterator().asScala
+      .filterNot(_.getFileName.toString.endsWith(".crc"))
+      .map(p => p.getFileName.toString -> (if (Files.isDirectory(p)) Nil else Files.readAllBytes(p).toSeq))
+      .toMap
+
+  /** `dir` holds exactly mr-out-0 … mr-out-(nReduce-1) and `_SUCCESS`, each
+    * byte-identical to what `writeText` writes for the oracle's rows `want`.
+    */
+  private def assertWritten(dir: String, want: Seq[KeyValue], nReduce: Int, clue: String): Unit = {
+    import spark.implicits._
+    val oracleDir = Files.createTempDirectory("graft-oracle").toString
+    Engine.writeText(spark.createDataset(want), oracleDir, nReduce)
+    val (got, expected) = (outputFiles(dir), outputFiles(oracleDir))
+    assert(got.keySet === (0 until nReduce).map(r => s"mr-out-$r").toSet + "_SUCCESS", clue)
+    assert(expected.keySet === got.keySet, clue)
+    val differ = got.keys.filter(f => got(f) != expected(f)).toSeq.sorted
+    assert(differ.isEmpty, s"$clue: ${differ.mkString(", ")} differ from the oracle's")
   }
 
   test("mapReduce construction starts no Spark job (queries build plans, not jobs)") {
@@ -390,18 +430,31 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("task retry recovers from a first-attempt crash (P7 crash analogue)") {
-    // a Combiner, so the retried map attempt runs the combine path too
+    // a Combiner, so the retried map attempt runs the combine path too;
+    // reduce crashes as well: in the reduce stage of a collect, and in
+    // writeText's fused task, after its attempt opened its temp file
     val crashing = new engine.Combiner {
-      def map(file: String, contents: String): Seq[KeyValue] = {
+      private def crashFirstAttempt(where: String): Unit = {
         val tc = org.apache.spark.TaskContext.get()
         if (tc.partitionId() == 0 && tc.attemptNumber() == 0)
-          throw new RuntimeException("injected crash (attempt 0)")
+          throw new RuntimeException(s"injected $where crash (attempt 0)")
+      }
+      def map(file: String, contents: String): Seq[KeyValue] = {
+        crashFirstAttempt("map")
         Apps.WordCount.map(file, contents)
       }
       def combine(key: String, values: Seq[String]): String = Apps.WordCount.combine(key, values)
-      def reduce(key: String, values: Seq[String]): String = Apps.WordCount.reduce(key, values)
+      def reduce(key: String, values: Seq[String]): String = {
+        crashFirstAttempt("reduce")
+        Apps.WordCount.reduce(key, values)
+      }
     }
     assert(runDistributed(crashing) === runOracle(Apps.WordCount))
+    val want = Engine.sequential(corpus, Apps.WordCount)
+    assert(want.exists(kv => Fnv1a.hash(kv.key) % 3 == 0), "bucket 0 must hold a key for its reduce to crash")
+    val tmp = Files.createTempDirectory("graft-retry").toString
+    Engine.writeText(Engine.run(spark, CorpusGlob, crashing), tmp, nReduce = 3)
+    assertWritten(tmp, want, 3, "retried fused write") // exact file set: no _temporary left
   }
 
   test("soak: randomized crash + stall injection on BOTH stages, repeated trials " +
@@ -449,6 +502,45 @@ class EngineSpec extends AnyFunSuite {
         .toMap
       assert(got === want, s"trial $trial diverged from the sequential oracle")
     }
+  }
+
+  test("writeText of an Engine.run result: byte-identical to the oracle's rows (fused sink)") {
+    for (app <- Seq(Apps.WordCount, Apps.Indexer, Apps.CrashData); n <- Seq(1, 3, 10)) {
+      val tmp = Files.createTempDirectory("graft-fused").toString
+      Engine.writeText(Engine.run(spark, CorpusGlob, app), tmp, n)
+      assertWritten(tmp, Engine.sequential(corpus, app), n, s"${app.getClass.getSimpleName} at nReduce = $n")
+    }
+    // a derived result is not fused: it is written as the rows it holds
+    val tmp = Files.createTempDirectory("graft-derived").toString
+    Engine.writeText(Engine.run(spark, CorpusGlob, Apps.WordCount).filter(_.value != "1"), tmp, 3)
+    assertWritten(tmp, Engine.sequential(corpus, Apps.WordCount).filter(_.value != "1"), 3, "derived")
+    // nor is a persisted one: writeText reads its cache and maps no file again
+    val maps = spark.sparkContext.longAccumulator("maps")
+    val counting = new engine.MrApp {
+      def map(file: String, contents: String): Seq[KeyValue] = { maps.add(1); Apps.CrashData.map(file, contents) }
+      def reduce(key: String, values: Seq[String]): String = Apps.CrashData.reduce(key, values)
+    }
+    val cached = Engine.run(spark, CorpusGlob, counting).persist()
+    try {
+      cached.count()
+      assert(maps.value === corpus.size.toLong)
+      Engine.writeText(cached, tmp, 3)
+      assert(maps.value === corpus.size.toLong, "writeText recomputed a persisted result")
+      assertWritten(tmp, Engine.sequential(corpus, Apps.CrashData), 3, "persisted")
+    } finally cached.unpersist()
+  }
+
+  test("writeText of an Engine.run result shuffles once: a map stage, then reduce-and-write") {
+    val tmp = Files.createTempDirectory("graft-stages").toString
+    def shuffles(stages: Seq[StageInfo]) = stages.count(_.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+    val fused = stagesRunDuring(Engine.writeText(Engine.run(spark, CorpusGlob, Apps.WordCount), tmp, 10))
+    assert(fused.size === 2, fused.map(_.name))
+    assert(shuffles(fused) === 1)
+    // a derived result is reduced in its own stage, then shuffled to the buckets
+    val derived = stagesRunDuring(
+      Engine.writeText(Engine.run(spark, CorpusGlob, Apps.WordCount).filter(_ => true), tmp, 10))
+    assert(derived.size === 3, derived.map(_.name))
+    assert(shuffles(derived) === 2)
   }
 
   test("output finality: commit marker exists before writeText returns (P6 analogue)") {
