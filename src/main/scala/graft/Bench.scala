@@ -57,11 +57,7 @@ object Bench {
     // GraftSession.dropAllBlocks (checkpoint-block lag was observed as
     // 5-10x slowdowns on later queries under a loaded host).
     def dropAllBlocks(): Unit = GraftSession.dropAllBlocks(spark)
-    // Dev-only filter (the driver never sets it): bench a subset to
-    // reproduce full-run timings without the 60-query wait.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val board = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val board = SparkEntry.board
     warmDir.foreach { wd =>
       board.foreach { case (_, fn) =>
         try fn(spark, wd).write.format("noop").mode("overwrite").save()

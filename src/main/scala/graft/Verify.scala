@@ -11,8 +11,8 @@ import java.nio.file.{Files, Paths}
   *  1. `oracle_sql.json` is written FIRST. A run killed mid-board then
   *     still leaves the driver a full oracle map plus every parquet
   *     completed so far — a partial gate instead of an empty one.
-  *  2. Queries run on a fixed thread pool (default 8, env
-  *     `SPARK_GRAFT_VERIFY_THREADS`). Spark schedules concurrent jobs
+  *  2. Queries run on a fixed pool of [[Threads]] threads. Spark
+  *     schedules concurrent jobs
   *     from one session natively; at verify SFs each query's cost is
   *     dominated by driver-side planning/codegen, so overlapping
   *     queries cuts board wall time several-fold (measured round 9:
@@ -25,15 +25,16 @@ import java.nio.file.{Files, Paths}
   *     output dir.
   */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.build(cpus)
-    new java.io.File(outDir).mkdirs()
 
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
+  /** Queries in flight at once. */
+  private val Threads = 8
+
+  /** `oracles` as one JSON object, name -> SQL. Escapes backslash, quote
+    * and ALL control chars (<0x20) — a tab or CR in hand-written SQL
+    * would otherwise make the gate's json.load fail and silently zero
+    * its correctness count.
+    */
+  def oracleJson(oracles: Map[String, String]): String = {
     def q(s: String): String = "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
@@ -43,19 +44,18 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    oracles.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
 
-    // Dev-only subset filter (the driver never sets it): dump a few
-    // queries without the full-board wait. tools/check.py forwards it.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val board = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val threads = sys.env.get("SPARK_GRAFT_VERIFY_THREADS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ >= 1)
-      .getOrElse(8)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.build(cpus)
+    new java.io.File(outDir).mkdirs()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
+
+    val board = SparkEntry.board
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(Threads)
     val done = new java.util.concurrent.atomic.AtomicInteger(0)
     val t0 = System.nanoTime()
     board.foreach { case (name, fn) =>
