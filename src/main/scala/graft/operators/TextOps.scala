@@ -3537,8 +3537,8 @@ object TextOps {
     * an independent engine, not against themselves.
     */
   /** ONE definition of the injection expression (over columns
-    * `doc_id`, `text`) — shared by [[piiDocs]] and the ingest stream
-    * ([[graft.streaming.PiiStream]]) so the two transports cannot
+    * `doc_id`, `text`) — shared by [[piiDocs]] and the ingest edge
+    * (`streaming.IngestEdge.projections`) so the two transports cannot
     * drift from each other or from the oracle's CTE.
     */
   private[graft] def piiInjectExpr: Column =
@@ -4080,7 +4080,7 @@ object TextOps {
 
   /** The SFT transform as a reusable projection over (doc_id, text) —
     * ONE definition, two transports: the batch gate above and
-    * `streaming.SftStream` plan exactly these Columns.
+    * `streaming.IngestEdge.projections` plan exactly these Columns.
     */
   private[graft] def sftRenderProjection(docs: DataFrame): DataFrame = {
     val fp = (c: Column) => conv(substring(md5(c), 1, 15), 16, 10).cast("long")
@@ -4151,7 +4151,8 @@ object TextOps {
 
   /** The DPO pair-assembly transform as a reusable projection over
     * (doc_id, text) — ONE definition, two transports (batch gate +
-    * `streaming.DpoStream`), the sftRenderProjection contract.
+    * `streaming.IngestEdge.projections`), the sftRenderProjection
+    * contract.
     *
     * Each doc derives a deterministic preference TRIPLE (the synthesis
     * pattern — no preference corpus exists; the discipline under test
@@ -4895,7 +4896,7 @@ object TextOps {
   /** The hashgram classifier's per-doc score as a reusable Column
     * over a `toks` array column — ONE definition for the batch sheet
     * (`hashgramScore`), the evaluation family below, and the ingest
-    * stream twin (`streaming.ScoreGateStream`), so the weight table
+    * edge (`streaming.IngestEdge.projections`), so the weight table
     * cannot drift between transports. w(token) = top-60-bit
     * md5 % 2001 − 1000; the fold is row-local (no explode, no
     * shuffle) — quality-classifier inference stays scan-bound at
@@ -4914,7 +4915,7 @@ object TextOps {
   /** Per-doc classifier-gate projection — (doc_id, source, score,
     * keep) with keep = score > 0, the `hashgramScore` keep rule at
     * row granularity. ONE definition, two transports: the batch side
-    * and `streaming.ScoreGateStream` both plan exactly this
+    * and `streaming.IngestEdge.projections` both plan exactly this
     * projection, so the ingest-edge gate cannot drift from the batch
     * sheet the oracle verifies.
     */
@@ -5282,7 +5283,7 @@ object TextOps {
 
   /** The FIM transform as a reusable projection over (doc_id, text) —
     * ONE definition, two transports: the batch gate above and
-    * `streaming.FimStream` plan exactly these Columns.
+    * `streaming.IngestEdge.projections` plan exactly these Columns.
     */
   private[graft] def fimProjection(docs: DataFrame): DataFrame = {
     val h = (salt: String) =>

@@ -702,10 +702,10 @@ object MultimodalOps {
   }
 
   /** The VAD gate as a reusable projection over (doc_id, text) — ONE
-    * definition, two transports: [[mmAudioVad]] and the ingest stream
-    * (`streaming.VadStream`) plan exactly these Columns. Needs the
-    * graft SQL functions (`ascii_window_sums`) that GraftExtensions
-    * injects.
+    * definition, two transports: [[mmAudioVad]] and the ingest edge
+    * (`streaming.IngestEdge.projections`) plan exactly these Columns.
+    * Needs the graft SQL functions (`ascii_window_sums`) that
+    * GraftExtensions injects.
     */
   private[graft] def vadProjection(docs: DataFrame): DataFrame = {
     docs

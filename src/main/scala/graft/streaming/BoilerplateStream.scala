@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming line-level boilerplate removal AT INGEST — the online
@@ -11,15 +11,12 @@ import org.apache.spark.sql.functions._
   * filter-before-persist, the CCNet/RefinedWeb line-dedup pass moved
   * to the ingest edge.
   *
-  * Architecture: STATELESS stream-static enrichment ([[DecontamStream]]'s
-  * argument): the boilerplate side is BOUNDED by construction — lines
-  * with doc-frequency ≥ the threshold number at most n_lines/threshold
-  * and in practice count the corpus's distinct TEMPLATES — so the full
-  * line SET is collected once from the canonical corpus and broadcast.
-  * Each arriving row then needs no state store, no watermark, and no
-  * shuffle: a pure map, so emitted rows equal the batch rewrite under
-  * ANY micro-batch slicing trivially, and at 100 TB the stream scales
-  * as scan-bound ingest with a template-sized broadcast.
+  * Architecture: a stateless [[IngestEdge]] with one broadcast side.
+  * The boilerplate side is BOUNDED by construction — lines with
+  * doc-frequency ≥ the threshold number at most n_lines/threshold and
+  * in practice count the corpus's distinct TEMPLATES — so the full
+  * line SET is collected once from the canonical corpus and broadcast,
+  * and the stream scales with a template-sized broadcast.
   *
   * The static side matches on line STRINGS (the batch path's 60-bit
   * line hashes never leave its own plan), so StreamingSpec's
@@ -35,12 +32,11 @@ object BoilerplateStream {
       clean_text: String
   )
 
-  /** The bounded boilerplate set: exact line strings with corpus
-    * doc-frequency ≥ the shared threshold, from the canonical corpus.
+  /** The bounded boilerplate set: exact line strings of `docs`
+    * (`doc_id`, `text`) with doc-frequency ≥ the shared threshold.
     */
-  private[graft] def boilerLineSet(spark: SparkSession, dir: String): Set[String] =
-    graft.operators.TextOps
-      .boilerplateDocs(spark, dir)
+  private[graft] def boilerLineSet(docs: DataFrame): Set[String] =
+    docs
       .select(col("doc_id"), explode(split(col("text"), "\n")).as("line"))
       .groupBy(col("line"))
       .agg(countDistinct(col("doc_id")).as("nd"))
@@ -49,6 +45,13 @@ object BoilerplateStream {
       .collect()
       .map(_.getString(0))
       .toSet
+
+  /** One document with the lines in `boiler` dropped. */
+  private[graft] def dropLines(id: Long, text: String, boiler: Set[String]): BoilerRow = {
+    val ls = text.split("\n", -1)
+    val kept = ls.filter(l => !boiler.contains(l))
+    BoilerRow(id, ls.length.toLong, (ls.length - kept.length).toLong, kept.mkString("\n"))
+  }
 
   /** Cleaned documents over a directory of document parquet files
     * (each file = one ingest micro-batch); the boilerplate set comes
@@ -62,22 +65,15 @@ object BoilerplateStream {
       corpusDir: String
   ): Dataset[BoilerRow] = {
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(boilerLineSet(spark, corpusDir))
-    spark.readStream
-      .schema(DedupStream.docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
+    val bc = spark.sparkContext.broadcast(
+      boilerLineSet(graft.operators.TextOps.boilerplateDocs(spark, corpusDir)))
+    IngestEdge
+      .docs(spark, streamDir)
       .select(
         col("doc_id"),
         graft.operators.TextOps.boilerplateInjectExpr.as("text")
       )
       .as[(Long, String)]
-      .map { case (id, text) =>
-        val ls = text.split("\n", -1)
-        val kept = ls.filter(l => !bc.value.contains(l))
-        BoilerRow(id, ls.length.toLong, (ls.length - kept.length).toLong,
-          kept.mkString("\n"))
-      }
+      .map { case (id, text) => dropLines(id, text, bc.value) }
   }
 }

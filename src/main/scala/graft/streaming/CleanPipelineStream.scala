@@ -10,15 +10,12 @@ import org.apache.spark.sql.functions._
   * token-wise secret redaction — and is persisted already clean.
   * This is the composition a production ingest edge actually runs
   * (one pass, not three), and it proves the per-family streams
-  * ([[BoilerplateStream]], [[PiiStream]]) compose.
+  * ([[BoilerplateStream]] and the PII edge of [[IngestEdge]]) compose.
   *
-  * Architecture: stream-static with ONE bounded broadcast (the
-  * template-bounded boilerplate line set, built from the canonical
-  * composite corpus — [[BoilerplateStream]]'s boundedness argument);
-  * stages 2–3 are pure per-row regex/token work. No state store, no
-  * watermark, no shuffle — emitted rows equal the batch pipeline
-  * under ANY micro-batch slicing, and at 100 TB the whole pipeline is
-  * scan-bound ingest.
+  * Architecture: a stateless [[IngestEdge]] with ONE bounded broadcast
+  * (the template-bounded boilerplate line set, built from the
+  * canonical composite corpus — [[BoilerplateStream]]'s boundedness
+  * argument); stages 2–3 are pure per-row regex/token work.
   *
   * The regex stages run on the SAME Java regex engine Spark's
   * `regexp_replace` uses (java.util.regex, replace-all semantics), so
@@ -36,22 +33,6 @@ object CleanPipelineStream {
       clean_text: String
   )
 
-  /** The boilerplate set over the COMPOSITE corpus (line 1 carries
-    * doc-unique PII/secret tails, so only true templates and large
-    * exact-dup clusters cross the threshold).
-    */
-  private[graft] def boilerLineSet(spark: SparkSession, dir: String): Set[String] =
-    graft.operators.TextOps
-      .dirtyDocs(spark, dir)
-      .select(col("doc_id"), explode(split(col("text"), "\n")).as("line"))
-      .groupBy(col("line"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= graft.operators.TextOps.BoilerDf)
-      .select(col("line"))
-      .collect()
-      .map(_.getString(0))
-      .toSet
-
   def cleaned(
       spark: SparkSession,
       streamDir: String,
@@ -59,23 +40,23 @@ object CleanPipelineStream {
   ): Dataset[CleanRow] = {
     import spark.implicits._
     import graft.operators.TextOps.{EmailRe, PhoneRe, Ipv4Re, SecretShapeRe, SecretDiversityMin}
-    val bc = spark.sparkContext.broadcast(boilerLineSet(spark, corpusDir))
+    // the boilerplate set over the COMPOSITE corpus: line 1 carries
+    // doc-unique PII/secret tails, so only true templates and large
+    // exact-dup clusters cross the threshold
+    val bc = spark.sparkContext.broadcast(
+      BoilerplateStream.boilerLineSet(graft.operators.TextOps.dirtyDocs(spark, corpusDir)))
     val shapeRe = ("^" + SecretShapeRe + "$").r
     def isSecret(t: String): Boolean =
       shapeRe.findFirstIn(t).isDefined && t.distinct.length >= SecretDiversityMin
-    spark.readStream
-      .schema(DedupStream.docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
+    IngestEdge
+      .docs(spark, streamDir)
       .select(col("doc_id"), col("source"), graft.operators.TextOps.piiInjectExpr.as("text"))
       .select(col("doc_id"), col("source"), graft.operators.TextOps.secretInjectExpr.as("text"))
       .select(col("doc_id"), graft.operators.TextOps.boilerplateInjectExpr.as("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
-        val ls = text.split("\n", -1)
-        val kept = ls.filter(l => !bc.value.contains(l))
-        val afterDrop = kept.mkString("\n")
+        val boiler = BoilerplateStream.dropLines(id, text, bc.value)
+        val afterDrop = boiler.clean_text
         val nPii = (EmailRe.r.findAllIn(afterDrop).size +
           PhoneRe.r.findAllIn(afterDrop).size +
           Ipv4Re.r.findAllIn(afterDrop).size).toLong
@@ -86,7 +67,7 @@ object CleanPipelineStream {
         val ts = afterPii.split(" ", -1)
         CleanRow(
           id,
-          (ls.length - kept.length).toLong,
+          boiler.n_dropped,
           nPii,
           ts.count(isSecret).toLong,
           ts.map(t => if (isSecret(t)) "<SECRET>" else t).mkString(" ")

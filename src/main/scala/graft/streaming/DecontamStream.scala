@@ -13,18 +13,17 @@ import org.apache.spark.sql.functions._
   * they ever reach a training shard — the streaming counterpart of
   * "run the decontamination pass before every training dump".
   *
-  * Architecture: STATELESS stream-static enrichment, not a stateful
-  * join — the benchmark side is BOUNDED by contract (thousands of
-  * eval docs; the same argument `decontaminateBloom` makes for its
-  * few-MB bloom), so its full hash→doc index is collected once at
-  * stream build and broadcast. Each document row carries its whole
-  * shingle-hash array (the same codegen `shingle_hashes` kernel +
-  * row-local distinct as the batch posting — one definition of the
-  * n-gram stream, two transports), so the per-row report needs no
-  * state store, no watermark, and no shuffle: emitted-set equality
-  * with the batch report holds under ANY micro-batch slicing
-  * trivially, and at 100 TB the stream scales as a pure map over
-  * ingest with a benchmark-sized broadcast.
+  * Architecture: a stateless [[IngestEdge]] enriched from a static
+  * side, not a stateful join — the benchmark side is BOUNDED by
+  * contract (thousands of eval docs; the same argument
+  * `decontaminateBloom` makes for its few-MB bloom), so its full
+  * hash→doc index is collected once at stream build and broadcast.
+  * Each document row carries its whole shingle-hash array (the same
+  * codegen `shingle_hashes` kernel + row-local distinct as the batch
+  * posting — one definition of the n-gram stream, two transports), so
+  * the per-row report reads only the row and the broadcast index, and
+  * at 100 TB the stream scales as a pure map over ingest with a
+  * benchmark-sized broadcast.
   *
   * Unlike the batch path (whose train/test sides both come from the
   * corpus split), the stream reads the benchmark index from the SAME
@@ -64,11 +63,8 @@ object DecontamStream {
     val idx = benchmarkIndex(spark, benchDir)
     val bc = spark.sparkContext.broadcast(idx)
     val toks = graft.operators.TextOps.tokens(lower(col("text")))
-    spark.readStream
-      .schema(DedupStream.docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
+    IngestEdge
+      .docs(spark, streamDir)
       .filter(graft.operators.TextOps.splitExpr(col("doc_id")) === "train")
       .select(
         col("doc_id"),

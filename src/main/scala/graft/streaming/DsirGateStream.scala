@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Streaming DSIR importance scorer AT INGEST — the online twin of the
@@ -10,19 +10,17 @@ import org.apache.spark.sql.functions._
   * pass can route or down-sample pages before anything else touches
   * them.
   *
-  * Architecture: STATELESS per-row scoring with a BROADCAST model,
-  * like [[PplGateStream]] — but where the KN gate needed a cap and a
-  * loud failure (its reference model is bounded only by CONTRACT),
-  * the DSIR λ table is bounded by CONSTRUCTION: exactly
-  * [[graft.operators.TextOps.DsirLambdaBuckets]] rows regardless of
-  * corpus size, so the collect is safe at any SF and the broadcast is
-  * a dense Long array indexed by bucket. Each row folds its own
+  * Architecture: a stateless [[IngestEdge]] scoring each row against a
+  * BROADCAST model, like [[PplGateStream]] — but where the KN gate
+  * needed a cap and a loud failure (its reference model is bounded
+  * only by CONTRACT), the DSIR λ table is bounded by CONSTRUCTION:
+  * exactly [[graft.operators.TextOps.DsirLambdaBuckets]] rows
+  * regardless of corpus size, so the collect is safe at any SF and the
+  * broadcast is a dense Long array indexed by bucket. Each row folds its own
   * unigram+bigram 60-bit fingerprints (the codegen `shingle_hashes`
   * kernel at widths 1 and 2 — md5 of the same strings the batch side
-  * hashes, so buckets are bit-identical) against the array; no state
-  * store, no watermark, no shuffle — emitted rows equal the batch
-  * sheet under ANY micro-batch slicing, and at 100 TB the stream
-  * scales as scan-bound ingest with a 1024-entry broadcast.
+  * hashes, so buckets are bit-identical) against the array; at 100 TB
+  * the stream scales as scan-bound ingest with a 1024-entry broadcast.
   */
 object DsirGateStream {
 
@@ -47,6 +45,15 @@ object DsirGateStream {
     out
   }
 
+  /** The hashed w-grams of the lowercase tokens of `text`: the codegen
+    * `shingle_hashes` kernel, empty rather than null when `text` is
+    * null, so such a row folds to the batch fold over no grams.
+    */
+  private[graft] def textShingles(w: Int): Column = coalesce(
+    graft.functions.VectorExpressions
+      .shingleHashes(graft.operators.TextOps.tokens(lower(col("text"))), lit(w)),
+    expr("CAST(array() AS array<bigint>)"))
+
   /** Per-arriving-doc importance rows over a directory of document
     * parquet files (each file = one ingest micro-batch); the model
     * fits on `refDir`'s canonical table.
@@ -55,19 +62,12 @@ object DsirGateStream {
     import spark.implicits._
     val nb = graft.operators.TextOps.DsirLambdaBuckets
     val bc = spark.sparkContext.broadcast(lambdaIndex(spark, refDir))
-    val toks = graft.operators.TextOps.tokens(lower(col("text")))
-    def sh(w: Int) = coalesce(
-      graft.functions.VectorExpressions.shingleHashes(toks, lit(w)),
-      expr("CAST(array() AS array<bigint>)"))
-    spark.readStream
-      .schema(DedupStream.docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
+    IngestEdge
+      .docs(spark, streamDir)
       .select(
         col("doc_id"),
         col("source"),
-        concat(sh(1), sh(2)).as("fps")
+        concat(textShingles(1), textShingles(2)).as("fps")
       )
       .as[(Long, String, Array[Long])]
       .map { case (id, src, fps) =>

@@ -9,17 +9,14 @@ import org.apache.spark.sql.functions._
   * (H64 = c64(n) − ⌊Σc·c64(c)/n⌋, the [[graft.operators.TextOps
   * .tokenEntropyGate]] arithmetic) and a low-entropy flag the moment
   * it lands — the repetition/template-spam filter running
-  * score-before-persist, beside [[GopherGateStream]] and
-  * [[ScoreGateStream]] in the ingest gate rack.
+  * score-before-persist, beside the Gopher and classifier gates of
+  * [[IngestEdge.projections]] in the ingest gate rack.
   *
-  * Architecture: a pure per-row MAP, the [[ScoreGateStream]] class —
-  * no state store, no watermark, no shuffle, no broadcast (the only
-  * "model" is the integer c64 log, a pure function). The per-row fold
-  * counts token types in a local hash map and applies the same
+  * Architecture: a stateless [[IngestEdge]] with no broadcast (the
+  * only "model" is the integer c64 log, a pure function). The per-row
+  * fold counts token types in a local hash map and applies the same
   * quantized logs the batch side evaluates through the `c64_log2`
-  * kernel, so emitted rows equal the batch per-doc frame
-  * bit-for-bit under ANY micro-batch slicing; at 100 TB the stream
-  * scales as scan-bound ingest.
+  * kernel, so emitted rows equal the batch per-doc frame bit-for-bit.
   */
 object EntropyGateStream {
 
@@ -52,11 +49,8 @@ object EntropyGateStream {
     import spark.implicits._
     val toks = graft.operators.TextOps.tokens(lower(col("text")))
     val low = graft.operators.TextOps.LowEntropyH64
-    spark.readStream
-      .schema(DedupStream.docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
+    IngestEdge
+      .docs(spark, dir)
       .select(col("doc_id"), col("source"), toks.as("toks"))
       .as[(Long, String, Seq[String])]
       .map { case (id, src, t) =>

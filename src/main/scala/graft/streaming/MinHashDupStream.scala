@@ -88,11 +88,8 @@ object MinHashDupStream {
       concat_ws(",",
         col("s").getItem(b * 3), col("s").getItem(b * 3 + 1), col("s").getItem(b * 3 + 2))
     }: _*)
-    spark.readStream
-      .schema(DedupStream.docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
+    IngestEdge
+      .docs(spark, dir)
       .select(
         col("doc_id"),
         graft.functions.VectorExpressions.minhashSigs(toks, lit(3)).as("s"),

@@ -80,11 +80,8 @@ object NearDupStream {
   def pairs(spark: SparkSession, dir: String): Dataset[NearPair] = {
     import spark.implicits._
     val toks = graft.operators.TextOps.tokens(lower(col("text")))
-    spark.readStream
-      .schema(DedupStream.docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
+    IngestEdge
+      .docs(spark, dir)
       .filter(size(toks) > 0) // token-less docs have no batch fingerprint
       .select(
         col("doc_id"),

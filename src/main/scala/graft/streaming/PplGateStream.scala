@@ -11,18 +11,16 @@ import org.apache.spark.sql.functions._
   * at the ingest edge: score-before-persist, then route by
   * head/middle/tail downstream.
   *
-  * Architecture: STATELESS per-row scoring with a BOUNDED broadcast
-  * model — the gate model trains on a REFERENCE corpus snapshot
-  * (CCNet trains its KenLM on Wikipedia, not on the crawl being
-  * filtered), so the model is bounded by contract and its
+  * Architecture: a stateless [[IngestEdge]] scoring each row against
+  * a BOUNDED broadcast model — the gate model trains on a REFERENCE
+  * corpus snapshot (CCNet trains its KenLM on Wikipedia, not on the
+  * crawl being filtered), so the model is bounded by contract and its
   * fp→nll64 map is collected once at stream build and broadcast: the
   * same boundedness argument [[DecontamStream]] makes for its
   * benchmark index. Each row folds its own bigram fingerprints (the
   * codegen `shingle_hashes` kernel at width 2 — bit-identical to the
-  * batch side's md5 bg_fp) against the map; no state store, no
-  * watermark, no shuffle, so emitted rows equal the batch sheet under
-  * ANY micro-batch slicing, and at 100 TB the stream scales as
-  * scan-bound ingest with a reference-model-sized broadcast.
+  * batch side's md5 bg_fp) against the map; at 100 TB the stream
+  * scales as scan-bound ingest with a reference-model-sized broadcast.
   *
   * Bigrams absent from the model are skipped, exactly as the batch
   * side's inner model join skips them; when the stream reads the
@@ -60,16 +58,17 @@ object PplGateStream {
     */
   private[graft] def modelIndex(
       spark: SparkSession, refDir: String): scala.collection.Map[Long, Long] = {
-    val cap = spark.conf
-      .get("spark.graft.pplgate.maxModelEntries", DefaultMaxModelEntries.toString)
-      .toLong
+    val key = "spark.graft.pplgate.maxModelEntries"
+    val conf = spark.conf.get(key, DefaultMaxModelEntries.toString)
+    val cap = conf.toLongOption.getOrElse(
+      throw new IllegalArgumentException(s"$key must be an integer: got '$conf'"))
     // cap + 1 must stay a valid Int LIMIT: a conf >= Int.MaxValue
     // would silently clamp the probe to the cap itself and disable
     // the over-cap detection (and a driver-side collect of 2^31 rows
     // is never a sane gate model anyway) — reject it loudly instead.
     require(
       cap > 0 && cap < Int.MaxValue,
-      s"spark.graft.pplgate.maxModelEntries must be in (0, ${Int.MaxValue}): got $cap")
+      s"$key must be in (0, ${Int.MaxValue}): got $cap")
     val rows = graft.operators.TextOps
       .knModelForStream(spark, refDir)
       .select(col("bg_fp"), col("nll64"))
@@ -79,9 +78,8 @@ object PplGateStream {
       throw new IllegalStateException(
         s"PplGateStream reference model exceeds $cap bigram types: the " +
           "refDir corpus is not reference-snapshot-sized. Point refDir at " +
-          "a bounded reference corpus (CCNet's discipline) or raise " +
-          "spark.graft.pplgate.maxModelEntries if the driver/broadcast " +
-          "budget allows it")
+          s"a bounded reference corpus (CCNet's discipline) or raise $key " +
+          "if the collect and broadcast budget allows it")
     val m = new scala.collection.mutable.LongMap[Long](rows.length * 2)
     rows.foreach { r =>
       val fp = r.getLong(0)
@@ -106,20 +104,9 @@ object PplGateStream {
   def scored(spark: SparkSession, streamDir: String, refDir: String): Dataset[PplRow] = {
     import spark.implicits._
     val bc = spark.sparkContext.broadcast(modelIndex(spark, refDir))
-    val toks = graft.operators.TextOps.tokens(lower(col("text")))
-    spark.readStream
-      .schema(DedupStream.docsSchema)
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
-      .select(
-        col("doc_id"),
-        col("source"),
-        coalesce(
-          graft.functions.VectorExpressions.shingleHashes(toks, lit(2)),
-          expr("CAST(array() AS array<bigint>)")
-        ).as("fps")
-      )
+    IngestEdge
+      .docs(spark, streamDir)
+      .select(col("doc_id"), col("source"), DsirGateStream.textShingles(2).as("fps"))
       .as[(Long, String, Array[Long])]
       .map { case (id, src, fps) =>
         val m = bc.value

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.{col, count, lit, max, sum}
 
 import graft.streaming.EventStream
@@ -12,6 +13,26 @@ import graft.streaming.EventStream
   */
 class StreamingSpec extends AnyFunSuite {
   import SparkTestBase._
+
+  /** Stages the sf0.001 documents as `n` files `b0.parquet`, …, file k
+    * holding the docs with doc_id ≡ k (mod n): each file is one
+    * micro-batch of an ingest edge.
+    */
+  private def sliceDocs(n: Int): String = {
+    val tmp = java.nio.file.Files.createTempDirectory("ingest-slices").toString
+    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
+    (0 until n).foreach { k =>
+      docs.filter(col("doc_id") % n === k).coalesce(1).write.parquet(s"$tmp/b$k")
+      val src = new java.io.File(s"$tmp/b$k").listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      java.nio.file.Files.copy(
+        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
+      // drop the staging dir so the stream's glob sees only b*.parquet
+      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
+      new java.io.File(s"$tmp/b$k").delete()
+    }
+    tmp
+  }
 
   test("streaming hourly rollup == batch hourly rollup") {
     val q = EventStream
@@ -851,18 +872,7 @@ class StreamingSpec extends AnyFunSuite {
     // documents sliced into 3 micro-batches by doc_id residue (any
     // slicing must yield the same pair SET — pairs emit when the
     // SECOND member arrives, wherever the cut fell)
-    val tmp = java.nio.file.Files.createTempDirectory("neardup-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      // drop the staging dir so the stream's glob sees only b*.parquet
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     val q = graft.streaming.NearDupStream
       .pairs(spark, tmp)
       .writeStream.outputMode("append").format("memory")
@@ -883,17 +893,7 @@ class StreamingSpec extends AnyFunSuite {
     // doc_id-residue slicing; the streamed verified pair set (distinct
     // over bands) must equal the batch minhashLsh artifact exactly,
     // jaccard values included (same long-ratio IEEE division).
-    val tmp = java.nio.file.Files.createTempDirectory("minhashdup-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     val q = graft.streaming.MinHashDupStream
       .pairs(spark, tmp)
       .writeStream.outputMode("append").format("memory")
@@ -909,51 +909,172 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming pii redaction: sliced ingest == batch rewrite") {
-    // stateless map-only stream: ANY slicing must reproduce the batch
-    // pii_rewrite rows exactly (shared injection + redaction Columns)
-    val tmp = java.nio.file.Files.createTempDirectory("pii-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
-    val q = graft.streaming.PiiStream
-      .redacted(spark, tmp)
+  test("ingest edge: one micro-batch per slice file") {
+    // every sliced-ingest test below relies on each b$k.parquet being
+    // its own micro-batch; without maxFilesPerTrigger the whole backlog
+    // would land in one batch and those tests would pass unsliced
+    val tmp = sliceDocs(3)
+    val q = graft.streaming.IngestEdge
+      .docs(spark, tmp)
       .writeStream.outputMode("append").format("memory")
-      .queryName("pii_stream").start()
+      .queryName("ingest_slices").start()
     try {
       q.processAllAvailable()
-      def key(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))
-      }.toSet
-      val streamed = key(spark.table("pii_stream").collect())
-      val batch = key(graft.operators.TextOps.piiRewrite(spark, Sf0001).collect())
-      assert(streamed === batch)
-      assert(streamed.exists(_._2 > 0), "redacted emails expected")
+      assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+      assert(spark.table("ingest_slices").count() ===
+        graft.operators.Tables.documents(spark, Sf0001).count())
     } finally q.stop()
+  }
+
+  /** The projection-only ingest edges (`IngestEdge.projections`), each
+    * streamed over 3 slices. Stateless map-only edges: ANY slicing must
+    * reproduce the batch frame exactly (shared projection Columns).
+    * `check` gets the streamed and the batch rows and asserts their
+    * keyed equality, the edge's non-vacuity and, for the gates, its
+    * reconciliation with the gate's per-source sheet.
+    */
+  private case class ProjectionEdge(
+      name: String,
+      edge: String,
+      batch: () => DataFrame,
+      check: (Array[Row], Array[Row]) => Unit)
+
+  private val projectionEdges = Seq(
+    ProjectionEdge("streaming pii redaction: sliced ingest == batch rewrite", "pii",
+      () => graft.operators.TextOps.piiRewrite(spark, Sf0001),
+      { (rows, batchRows) =>
+        def key(rows: Array[Row]) = rows.map { r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))
+        }.toSet
+        val streamed = key(rows)
+        val batch = key(batchRows)
+        assert(streamed === batch)
+        assert(streamed.exists(_._2 > 0), "redacted emails expected")
+      }),
+    ProjectionEdge(
+      "streaming score gate: sliced ingest == batch projection, keep counts == gate sheet",
+      "score",
+      () => graft.operators.TextOps
+        .hashgramGateProjection(graft.operators.Tables.documents(spark, Sf0001)),
+      { (rows, batchRows) =>
+        def key(rows: Array[Row]) = rows.map { r =>
+          (r.getLong(0), r.getString(1), r.getLong(2), r.getBoolean(3))
+        }.toSet
+        val streamed = key(rows)
+        val batch = key(batchRows)
+        assert(streamed === batch)
+        // the edge gate reconciles with the batch per-source sheet
+        val streamKeeps = streamed.groupBy(_._2).map { case (s, g) =>
+          (s, g.count(_._4).toLong)
+        }
+        val sheet = graft.operators.TextOps.hashgramScore(spark, Sf0001).collect()
+          .map(r => (r.getString(0), r.getAs[Long]("n_keep"))).toMap
+        assert(streamKeeps === sheet)
+        assert(streamed.exists(_._4) && streamed.exists(!_._4),
+          "the gate should keep some docs and drop some")
+      }),
+    ProjectionEdge("streaming fim transform: sliced ingest == batch fim_split row-for-row", "fim",
+      () => graft.operators.TextOps.fimSplit(spark, Sf0001),
+      { (rows, batchRows) =>
+        def key(rows: Array[Row]) = rows.map { r =>
+          (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getLong(3),
+            r.getLong(4), r.getLong(5), r.getLong(6))
+        }.toSet
+        val streamed = key(rows)
+        val batch = key(batchRows)
+        assert(streamed === batch)
+        assert(streamed.exists(_._2), "some docs should be FIM'd")
+      }),
+    ProjectionEdge(
+      "streaming gopher gate: sliced ingest == batch projection, pass counts == rule sheet",
+      "gopher",
+      () => graft.operators.TextOps
+        .gopherRuleProjection(graft.operators.TextOps.gopherDocs(spark, Sf0001)),
+      { (rows, batchRows) =>
+        def key(rows: Array[Row]) = rows.map { r =>
+          (r.getLong(0), r.getString(1),
+            (2 to 8).map(r.getBoolean).mkString(","))
+        }.toSet
+        val streamed = key(rows)
+        val batch = key(batchRows)
+        assert(streamed === batch)
+        // the edge gate reconciles with the batch per-source sheet
+        val streamPass = rows.groupBy(_.getString(1))
+          .map { case (s, g) =>
+            (s, g.count(r => !(2 to 8).exists(r.getBoolean)).toLong)
+          }
+        val sheet = graft.operators.TextOps.gopherRules(spark, Sf0001).collect()
+          .map(r => (r.getString(0), r.getAs[Long]("n_pass"))).toMap
+        assert(streamPass === sheet)
+        val flags = rows.flatMap(r => (2 to 8).map(r.getBoolean))
+        assert(flags.exists(identity) && flags.exists(!_),
+          "rules should fire on some docs and spare others")
+      }),
+    ProjectionEdge("streaming vad gate: sliced ingest == batch mm_audio_vad row-for-row", "vad",
+      () => graft.sources.MultimodalOps.mmAudioVad(spark, Sf0001),
+      { (rows, batchRows) =>
+        def key(rows: Array[Row]) = rows.map { r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
+        }.toSet
+        val streamed = key(rows)
+        val batch = key(batchRows)
+        assert(streamed === batch)
+        assert(streamed.nonEmpty)
+        // the gate discriminates at the edge: activity varies per media
+        assert(streamed.map(_._5).size > 1 || streamed.map(t => t._3).toSeq.distinct.size > 1)
+      }),
+    ProjectionEdge("streaming sft render: sliced ingest == batch sft_render_mask row-for-row", "sft",
+      () => graft.operators.TextOps.sftRenderMask(spark, Sf0001),
+      { (rows, batchRows) =>
+        def key(rows: Array[Row]) = rows.map { r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4), r.getLong(5))
+        }.toSet
+        val streamed = key(rows)
+        val batch = key(batchRows)
+        assert(streamed === batch)
+        // loss masks are live at the edge: some docs carry loss tokens
+        assert(streamed.exists(_._4 > 0L))
+      }),
+    ProjectionEdge(
+      "streaming dpo assembly: sliced ingest == batch pair projection row-for-row", "dpo",
+      () => graft.operators.TextOps
+        .dpoPairProjection(graft.operators.Tables.documents(spark, Sf0001)),
+      { (rows, batchRows) =>
+        def key(rows: Array[Row]) = rows.map { r =>
+          (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+            r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))
+        }.toSet
+        val streamed = key(rows)
+        val batch = key(batchRows)
+        assert(streamed === batch)
+        // both branches are live at the edge: chosen != rejected for
+        // every non-degenerate pair
+        assert(streamed.exists(t => t._8 == 0L && t._6 != t._7))
+        assert(streamed.filter(_._8 == 0L).forall(t => t._6 != t._7))
+      })
+  )
+
+  projectionEdges.foreach { e =>
+    test(e.name) {
+      val tmp = sliceDocs(3)
+      val table = s"${e.edge}_stream"
+      val q = graft.streaming.IngestEdge.projections(e.edge)(
+        graft.streaming.IngestEdge.docs(spark, tmp))
+        .writeStream.outputMode("append").format("memory")
+        .queryName(table).start()
+      try {
+        q.processAllAvailable()
+        e.check(spark.table(table).collect(), e.batch().collect())
+      } finally q.stop()
+    }
   }
 
   test("streaming boilerplate removal: sliced ingest == batch rewrite") {
     // stream-static with a template-bounded broadcast line set; the
     // static side matches on STRINGS while the batch path uses 60-bit
     // line hashes, so equality also proves the batch side collision-free
-    val tmp = java.nio.file.Files.createTempDirectory("boiler-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     val q = graft.streaming.BoilerplateStream
       .cleaned(spark, tmp, Sf0001)
       .writeStream.outputMode("append").format("memory")
@@ -974,17 +1095,7 @@ class StreamingSpec extends AnyFunSuite {
     // the composed edge: boiler drop (broadcast set) + pii + secret
     // redaction in one stateless pass; any slicing must reproduce the
     // batch clean_pipeline rows exactly
-    val tmp = java.nio.file.Files.createTempDirectory("clean-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     val q = graft.streaming.CleanPipelineStream
       .cleaned(spark, tmp, Sf0001)
       .writeStream.outputMode("append").format("memory")
@@ -1006,17 +1117,7 @@ class StreamingSpec extends AnyFunSuite {
     // same 3-way doc_id-residue slicing as the near-dup stream test:
     // the per-doc report is stateless, so ANY slicing must reproduce
     // the batch decontaminate rows exactly
-    val tmp = java.nio.file.Files.createTempDirectory("decontam-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     // benchmark index comes from the canonical table, the stream reads
     // the sliced copies — so contaminated docs must match batch exactly
     val q = graft.streaming.DecontamStream
@@ -1094,247 +1195,12 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming score gate: sliced ingest == batch projection, keep counts == gate sheet") {
-    // stateless map-only classifier gate: ANY slicing must reproduce
-    // the batch hashgram projection exactly (shared scoring Columns),
-    // and the streamed keep counts must reconcile with the
-    // hashgram_score gate's per-source sheet
-    val tmp = java.nio.file.Files.createTempDirectory("scoregate-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
-    val q = graft.streaming.ScoreGateStream
-      .scored(spark, tmp)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("scoregate_stream").start()
-    try {
-      q.processAllAvailable()
-      def key(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-        (r.getLong(0), r.getString(1), r.getLong(2), r.getBoolean(3))
-      }.toSet
-      val streamed = key(spark.table("scoregate_stream").collect())
-      val batch = key(
-        graft.operators.TextOps
-          .hashgramGateProjection(
-            graft.operators.Tables.documents(spark, Sf0001))
-          .collect())
-      assert(streamed === batch)
-      // the edge gate reconciles with the batch per-source sheet
-      val streamKeeps = streamed.groupBy(_._2).map { case (s, g) =>
-        (s, g.count(_._4).toLong)
-      }
-      val sheet = graft.operators.TextOps.hashgramScore(spark, Sf0001).collect()
-        .map(r => (r.getString(0), r.getAs[Long]("n_keep"))).toMap
-      assert(streamKeeps === sheet)
-      assert(streamed.exists(_._4) && streamed.exists(!_._4),
-        "the gate should keep some docs and drop some")
-    } finally q.stop()
-  }
-
-  test("streaming fim transform: sliced ingest == batch fim_split row-for-row") {
-    // stateless map-only transform: ANY slicing must reproduce the
-    // batch PSM records exactly (shared projection Columns)
-    val tmp = java.nio.file.Files.createTempDirectory("fim-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
-    val q = graft.streaming.FimStream
-      .records(spark, tmp)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("fim_stream").start()
-    try {
-      q.processAllAvailable()
-      def key(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-        (r.getLong(0), r.getBoolean(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5), r.getLong(6))
-      }.toSet
-      val streamed = key(spark.table("fim_stream").collect())
-      val batch = key(graft.operators.TextOps.fimSplit(spark, Sf0001).collect())
-      assert(streamed === batch)
-      assert(streamed.exists(_._2), "some docs should be FIM'd")
-    } finally q.stop()
-  }
-
-  test("streaming gopher gate: sliced ingest == batch projection, pass counts == rule sheet") {
-    // stateless map-only rule gate: ANY slicing must reproduce the
-    // batch Gopher rule projection exactly (shared injection + rule
-    // Columns), and streamed pass counts must reconcile with the
-    // gopher_rules per-source sheet
-    val tmp = java.nio.file.Files.createTempDirectory("gopher-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
-    val q = graft.streaming.GopherGateStream
-      .flagged(spark, tmp)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("gopher_stream").start()
-    try {
-      q.processAllAvailable()
-      def key(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-        (r.getLong(0), r.getString(1),
-          (2 to 8).map(r.getBoolean).mkString(","))
-      }.toSet
-      val streamed = key(spark.table("gopher_stream").collect())
-      val batch = key(
-        graft.operators.TextOps
-          .gopherRuleProjection(graft.operators.TextOps.gopherDocs(spark, Sf0001))
-          .collect())
-      assert(streamed === batch)
-      // the edge gate reconciles with the batch per-source sheet
-      val streamPass = spark.table("gopher_stream").collect().groupBy(_.getString(1))
-        .map { case (s, g) =>
-          (s, g.count(r => !(2 to 8).exists(r.getBoolean)).toLong)
-        }
-      val sheet = graft.operators.TextOps.gopherRules(spark, Sf0001).collect()
-        .map(r => (r.getString(0), r.getAs[Long]("n_pass"))).toMap
-      assert(streamPass === sheet)
-      val flags = spark.table("gopher_stream").collect()
-        .flatMap(r => (2 to 8).map(r.getBoolean))
-      assert(flags.exists(identity) && flags.exists(!_),
-        "rules should fire on some docs and spare others")
-    } finally q.stop()
-  }
-
-  test("streaming vad gate: sliced ingest == batch mm_audio_vad row-for-row") {
-    // stateless map-only media gate: ANY slicing must reproduce the
-    // batch VAD projection exactly (shared windowing + cut Columns)
-    val tmp = java.nio.file.Files.createTempDirectory("vad-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
-    val q = graft.streaming.VadStream
-      .gated(spark, tmp)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("vad_stream").start()
-    try {
-      q.processAllAvailable()
-      def key(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-      }.toSet
-      val streamed = key(spark.table("vad_stream").collect())
-      val batch = key(
-        graft.sources.MultimodalOps.mmAudioVad(spark, Sf0001).collect())
-      assert(streamed === batch)
-      assert(streamed.nonEmpty)
-      // the gate discriminates at the edge: activity varies per media
-      assert(streamed.map(_._5).size > 1 || streamed.map(t => t._3).toSeq.distinct.size > 1)
-    } finally q.stop()
-  }
-
-  test("streaming sft render: sliced ingest == batch sft_render_mask row-for-row") {
-    // stateless map-only transform: ANY slicing must reproduce the
-    // batch rendered/masked records exactly (shared projection Columns)
-    val tmp = java.nio.file.Files.createTempDirectory("sft-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
-    val q = graft.streaming.SftStream
-      .rendered(spark, tmp)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sft_stream").start()
-    try {
-      q.processAllAvailable()
-      def key(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5))
-      }.toSet
-      val streamed = key(spark.table("sft_stream").collect())
-      val batch = key(
-        graft.operators.TextOps.sftRenderMask(spark, Sf0001).collect())
-      assert(streamed === batch)
-      // loss masks are live at the edge: some docs carry loss tokens
-      assert(streamed.exists(_._4 > 0L))
-    } finally q.stop()
-  }
-
-  test("streaming dpo assembly: sliced ingest == batch pair projection row-for-row") {
-    // stateless map-only transform (#25): ANY slicing must reproduce
-    // the batch-assembled preference triples exactly (shared
-    // projection Columns — TextOps.dpoPairProjection)
-    val tmp = java.nio.file.Files.createTempDirectory("dpo-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
-    val q = graft.streaming.DpoStream
-      .pairs(spark, tmp)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("dpo_stream").start()
-    try {
-      q.processAllAvailable()
-      def key(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-        (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))
-      }.toSet
-      val streamed = key(spark.table("dpo_stream").collect())
-      val batch = key(graft.operators.TextOps
-        .dpoPairProjection(graft.operators.Tables.documents(spark, Sf0001))
-        .collect())
-      assert(streamed === batch)
-      // both branches are live at the edge: chosen != rejected for
-      // every non-degenerate pair
-      assert(streamed.exists(t => t._8 == 0L && t._6 != t._7))
-      assert(streamed.filter(_._8 == 0L).forall(t => t._6 != t._7))
-    } finally q.stop()
-  }
-
   test("streaming ppl gate: sliced ingest == batch kn_doc_ppl row-for-row") {
     // stateless per-row scoring against the broadcast reference model:
     // ANY slicing must reproduce the batch per-doc perplexity sheet
     // exactly (the stream reads sliced copies; the model trains on the
     // canonical table, so every bigram hits)
-    val tmp = java.nio.file.Files.createTempDirectory("pplgate-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     val q = graft.streaming.PplGateStream
       .scored(spark, tmp, Sf0001)
       .writeStream.outputMode("append").format("memory")
@@ -1358,17 +1224,7 @@ class StreamingSpec extends AnyFunSuite {
     // array (bounded by CONSTRUCTION, unlike the ppl gate's
     // by-contract model): any slicing must reproduce the batch
     // per-doc importance sheet exactly
-    val tmp = java.nio.file.Files.createTempDirectory("dsirgate-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     val q = graft.streaming.DsirGateStream
       .scored(spark, tmp, Sf0001)
       .writeStream.outputMode("append").format("memory")
@@ -1392,17 +1248,7 @@ class StreamingSpec extends AnyFunSuite {
     // keep iff score64 >= the source's batch-fit acceptance threshold
     // (ties at the boundary all pass — the order-free per-row form of
     // the quota); sources without a fitted policy reject
-    val tmp = java.nio.file.Files.createTempDirectory("dsirsel-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     val q = graft.streaming.DsirSelectStream
       .kept(spark, tmp, Sf0001)
       .writeStream.outputMode("append").format("memory")
@@ -1432,17 +1278,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming GLOBAL dsir selection gate: sliced ingest vs the batch Gumbel " +
     "quota obeys the threshold superset/subset contracts; 2-policy edge agreement") {
-    val tmp = java.nio.file.Files.createTempDirectory("dsirglob-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 2).foreach { k =>
-      docs.filter(col("doc_id") % 3 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(3)
     val q = graft.streaming.DsirSelectGlobalStream
       .kept(spark, tmp, Sf0001)
       .writeStream.outputMode("append").format("memory")
@@ -1489,17 +1325,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming entropy gate: sliced ingest == per-doc c64 entropy, folds to the batch sheet") {
-    val tmp = java.nio.file.Files.createTempDirectory("entgate-stream").toString
-    val docs = graft.operators.Tables.documents(spark, Sf0001).localCheckpoint()
-    (0 to 1).foreach { k =>
-      docs.filter(col("doc_id") % 2 === k).coalesce(1).write.parquet(s"$tmp/b$k")
-      val src = new java.io.File(s"$tmp/b$k").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.copy(
-        src.toPath, java.nio.file.Paths.get(tmp, s"b$k.parquet"))
-      new java.io.File(s"$tmp/b$k").listFiles().foreach(_.delete())
-      new java.io.File(s"$tmp/b$k").delete()
-    }
+    val tmp = sliceDocs(2)
     val q = graft.streaming.EntropyGateStream
       .scored(spark, tmp)
       .writeStream.outputMode("append").format("memory")
@@ -1540,13 +1366,21 @@ class StreamingSpec extends AnyFunSuite {
     // cap+1 rows either way)
     val key = "spark.graft.pplgate.maxModelEntries"
     val before = spark.conf.getOption(key)
-    spark.conf.set(key, "10") // sf0.001 model has far more bigram types
+    // "10": the sf0.001 model has far more bigram types; "ten": a cap
+    // that does not parse must still name the knob
+    val inputs = Seq[(String, Class[_])](
+      "10" -> classOf[IllegalStateException],
+      "ten" -> classOf[IllegalArgumentException])
     try {
-      val e = intercept[IllegalStateException] {
-        graft.streaming.PplGateStream.modelIndex(spark, Sf0001)
+      for ((cap, thrown) <- inputs) {
+        spark.conf.set(key, cap)
+        val e = intercept[RuntimeException] {
+          graft.streaming.PplGateStream.modelIndex(spark, Sf0001)
+        }
+        assert(e.getClass === thrown)
+        assert(e.getMessage.contains("maxModelEntries"))
+        assert(e.getMessage.contains(cap))
       }
-      assert(e.getMessage.contains("maxModelEntries"))
-      assert(e.getMessage.contains("10"))
     } finally {
       before match {
         case Some(v) => spark.conf.set(key, v)
